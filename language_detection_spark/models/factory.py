@@ -22,8 +22,17 @@ from pathlib import Path
 
 import numpy as np
 
-from ..functions.ngram import pack_gram, unpack_gram
+from ..functions.ngram import _SHIFT, pack_gram, unpack_gram
 from .profile import LangProfile, _ulen
+
+
+def _gram_len(keys: np.ndarray) -> np.ndarray:
+    """Gram length (1..3) of packed gram keys."""
+    return (
+        1
+        + (keys >= (1 << _SHIFT)).astype(np.int64)
+        + (keys >= (1 << (2 * _SHIFT))).astype(np.int64)
+    )
 
 
 class DetectorModel:
@@ -56,7 +65,7 @@ class DetectorModel:
 
     def __getstate__(self):
         # never ship the reconstructible counts cache in a broadcast —
-        # executors rebuild it locally on first perplexity use
+        # executors gather the cells the LM reads via counts_at
         state = self.__dict__.copy()
         if state.get("n_words") is not None:
             state["_counts"] = None
@@ -64,19 +73,29 @@ class DetectorModel:
 
     @property
     def counts(self):
-        """int64[n_grams, n_langs] raw freq counts (perplexity LM reuse) —
-        lazily reconstructed executor-side, see __init__."""
+        """int64[n_grams, n_langs] raw freq counts — lazily reconstructed
+        on first access, see __init__.  The perplexity LM reads
+        :meth:`counts_at` instead, which never builds this matrix."""
         if self._counts is None and self.n_words is not None:
-            from ..functions.ngram import _SHIFT
-
-            ln = (
-                1
-                + (self.keys >= (1 << _SHIFT)).astype(np.int64)
-                + (self.keys >= (1 << (2 * _SHIFT))).astype(np.int64)
-            )
-            denom = self.n_words.T[ln - 1]  # (n_grams, n_langs)
+            denom = self.n_words.T[_gram_len(self.keys) - 1]  # (n_grams, n_langs)
             self._counts = np.rint(self.probs * denom).astype(np.int64)
         return self._counts
+
+    @property
+    def has_counts(self) -> bool:
+        """Whether raw counts are stored or reconstructible."""
+        return self._counts is not None or self.n_words is not None
+
+    def counts_at(self, rows: np.ndarray, langs) -> np.ndarray:
+        """``counts[rows, langs]`` without materializing ``counts``: the
+        same ``rint(probs * n_words[lang, len-1])`` the property applies to
+        the whole matrix, evaluated only at the gathered cells, so the
+        result is bit-identical and the full int64 matrix (as large as
+        ``probs``) is never built on an executor."""
+        if self.n_words is None:
+            return self.counts[rows, langs]
+        denom = self.n_words[langs, _gram_len(self.keys[rows]) - 1]
+        return np.rint(self.probs[rows, langs] * denom).astype(np.int64)
 
     # ------------------------------------------------------------------
     @classmethod

@@ -876,8 +876,11 @@ def synth_dup_audio_df(
 # --------------------------------------------------------------------------
 
 #: frame_idx is packed into the low bits of the banded-join item id;
-#: one video may hold at most this many sampled frames.
-_FRAME_ID_STRIDE = 4096
+#: one video may hold at most this many sampled frames.  The stride is a
+#: power of two by construction, so packed ids unpack with a right shift,
+#: exact for every 64-bit id (float division breaks silently above 2^53).
+_FRAME_ID_SHIFT = 12
+_FRAME_ID_STRIDE = 1 << _FRAME_ID_SHIFT
 
 
 def video_frame_hashes(
@@ -962,11 +965,8 @@ def video_near_dup_pairs(
         h, max_hamming=max_hamming, key_chunks=key_chunks,
         max_bucket_size=max_bucket_size, bits=64,
     )
-    # integer unpacking (stride is 2^12): exact for all 64-bit packed ids,
-    # unlike float division which breaks silently above 2^53
-    assert _FRAME_ID_STRIDE == 1 << 12
-    va = F.shiftrightunsigned(F.col("id_a"), 12)
-    vb = F.shiftrightunsigned(F.col("id_b"), 12)
+    va = F.shiftrightunsigned(F.col("id_a"), _FRAME_ID_SHIFT)
+    vb = F.shiftrightunsigned(F.col("id_b"), _FRAME_ID_SHIFT)
     return (
         fp.select(
             F.least(va, vb).alias("id_a"),

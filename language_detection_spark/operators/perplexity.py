@@ -23,7 +23,7 @@ def perplexity_from_keys(
     model: DetectorModel, keys: np.ndarray, lang_index: int, alpha: float = 0.1
 ) -> float | None:
     """LM over already-extracted packed gram keys (shared with detection)."""
-    if model.counts is None:
+    if not model.has_counts:
         raise ValueError("model has no raw counts (needed for the LM)")
     k3 = keys[keys >= _THREE_GRAM_MIN]
     if k3.size == 0:
@@ -31,8 +31,8 @@ def perplexity_from_keys(
     V = float(model.keys.size)
     r3 = model.lookup_rows(k3)
     r2 = model.lookup_rows(k3 & _PREFIX_MASK)
-    c3 = np.where(r3 >= 0, model.counts[np.maximum(r3, 0), lang_index], 0)
-    c2 = np.where(r2 >= 0, model.counts[np.maximum(r2, 0), lang_index], 0)
+    c3 = np.where(r3 >= 0, model.counts_at(np.maximum(r3, 0), lang_index), 0)
+    c2 = np.where(r2 >= 0, model.counts_at(np.maximum(r2, 0), lang_index), 0)
     logp = np.log(c3 + alpha) - np.log(c2 + alpha * V)
     return float(np.exp(-logp.mean()))
 
@@ -53,7 +53,7 @@ def perplexity_many_from_keys(
     contiguous slice of the same length and contents as the scalar path's
     array, so numpy's pairwise summation blocks identically.  Returns
     nan where undefined (no counts row is an error, as before)."""
-    if model.counts is None:
+    if not model.has_counts:
         raise ValueError("model has no raw counts (needed for the LM)")
     out = np.full(len(keys_list), np.nan)
     docs: list[int] = []
@@ -78,8 +78,8 @@ def perplexity_many_from_keys(
     r2 = model.lookup_rows(cat & _PREFIX_MASK)
     ln = np.asarray(lens)
     li_rep = np.repeat(np.asarray(lis), ln)
-    c3 = np.where(r3 >= 0, model.counts[np.maximum(r3, 0), li_rep], 0)
-    c2 = np.where(r2 >= 0, model.counts[np.maximum(r2, 0), li_rep], 0)
+    c3 = np.where(r3 >= 0, model.counts_at(np.maximum(r3, 0), li_rep), 0)
+    c2 = np.where(r2 >= 0, model.counts_at(np.maximum(r2, 0), li_rep), 0)
     logp = np.log(c3 + alpha) - np.log(c2 + alpha * V)
     hi = np.cumsum(ln)
     lo = hi - ln

@@ -7,9 +7,14 @@ UDFs anywhere, per the engine contract):
                                  wrapping P1-P6 + F1-F2 + I1-I4 + Q2
 3. ``make_detect_udf(model)``    (url, text) → struct(lang, lang_conf)
 
-The detector model rides a Spark broadcast created lazily per executor
-(module-level cache keyed by broadcast id) so the dense matrices transfer
-once per worker, not per batch.
+How the detector model travels: with a session, the UDF closure holds
+only the Spark broadcast handle (:func:`_model_ref`), never the model
+itself, so the pickled UDF command stays a few KB and each Python worker
+deserializes exactly one copy of the model — the broadcast's, once per
+worker process.  The perplexity LM gathers the raw counts it needs from
+that copy (:meth:`DetectorModel.counts_at`) instead of materializing a
+second full-size counts matrix.  Without a session (``spark=None``) the
+closure keeps the model for local, in-process use.
 """
 
 from __future__ import annotations
@@ -65,11 +70,22 @@ def _seeds_for(urls: pd.Series, texts: pd.Series, salt: int) -> list[int]:
     return out
 
 
+def _model_ref(model: DetectorModel, spark=None):
+    """Zero-argument accessor for the model inside a UDF body.  With a
+    session the returned closure captures only the broadcast handle —
+    capturing ``model`` too would pickle the whole model into every UDF
+    command and give each task its own copy next to the broadcast one."""
+    if spark is None:
+        return lambda: model
+    bc = spark.sparkContext.broadcast(model)
+    return lambda: bc.value
+
+
 def make_detect_udf(model: DetectorModel, spark=None, seed_salt: int = 0):
-    bc = spark.sparkContext.broadcast(model) if spark is not None else None
+    get_model = _model_ref(model, spark)
 
     def _detect(batch: pd.DataFrame) -> pd.DataFrame:
-        m = bc.value if bc is not None else model
+        m = get_model()
         texts = batch["text"]
         seeds = _seeds_for(batch["url"], texts, seed_salt)
         langs, confs, _ = detect_batch(m, list(texts), seeds)
@@ -98,10 +114,10 @@ def make_annotate_udf(model: DetectorModel, spark=None, seed_salt: int = 0,
         comes from the profile LM when the predicted language has a
         profile.
     """
-    bc = spark.sparkContext.broadcast(model) if spark is not None else None
+    get_model = _model_ref(model, spark)
 
     def _annotate(batch: pd.DataFrame) -> pd.DataFrame:
-        m = bc.value if bc is not None else model
+        m = get_model()
         texts = list(batch["text"])
         if engine == "langid_v3":
             from .langid_v3 import LangIdV3

@@ -2050,8 +2050,8 @@ def _perplexity_oracle_base(sf_dir: str) -> str | None:
         uk, n = np.unique(k3, return_counts=True)
         r3 = m.lookup_rows(uk)
         r2 = m.lookup_rows(uk & prefix_mask)
-        c3 = np.where(r3 >= 0, m.counts[np.maximum(r3, 0), li], 0)
-        c2 = np.where(r2 >= 0, m.counts[np.maximum(r2, 0), li], 0)
+        c3 = np.where(r3 >= 0, m.counts_at(np.maximum(r3, 0), li), 0)
+        c2 = np.where(r2 >= 0, m.counts_at(np.maximum(r2, 0), li), 0)
         for k, nn, a, b in zip(uk, n, c3, c2):
             gram_rows.append((int(d), int(k), int(nn)))
             lm_pairs[(int(k), lg)] = (int(a), int(b))

@@ -48,6 +48,31 @@ def test_annotate_udf_evaluates_once(spark, tiny_model):
     assert plan.count("ArrowEvalPython") == 1
 
 
+@pytest.mark.parametrize("factory", ["make_annotate_udf", "make_detect_udf"])
+def test_udf_command_does_not_carry_the_model(spark, monkeypatch, factory):
+    """With a session, the function handed to pandas_udf references only
+    the model broadcast: pickled it is KBs, not the ~35 MB model (which
+    every task would otherwise unpickle next to the broadcast copy)."""
+    from pyspark import cloudpickle
+
+    from language_detection_spark.models.factory import load_default_model
+    from language_detection_spark.operators import udfs
+
+    handed = []
+    pandas_udf = F.pandas_udf
+
+    def recording_pandas_udf(fn, *args, **kwargs):
+        handed.append(fn)
+        return pandas_udf(fn, *args, **kwargs)
+
+    monkeypatch.setattr(F, "pandas_udf", recording_pandas_udf)
+    model = load_default_model()
+    assert len(cloudpickle.dumps(model)) > 10e6     # the size being avoided
+    getattr(udfs, factory)(model, spark)
+    assert len(handed) == 1
+    assert len(cloudpickle.dumps(handed[0])) < 1e6
+
+
 def test_html_projected_away_before_shuffle(spark, tiny_model, sf_dir):
     from language_detection_spark.operators.pipeline import (
         PipelineOptions,

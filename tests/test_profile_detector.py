@@ -282,6 +282,88 @@ def test_counts_lazy_reconstruction_exact():
     assert (m2.counts == got).all()
 
 
+def _perplexity_full_matrix(model, keys_list, lang_indices, alpha=0.1):
+    """The LM as it read the whole materialized ``counts`` matrix — the
+    reference the per-cell gather must match bit for bit."""
+    import numpy as np
+
+    from language_detection_spark.operators.perplexity import (
+        _PREFIX_MASK,
+        _THREE_GRAM_MIN,
+    )
+
+    out = np.full(len(keys_list), np.nan)
+    V = float(model.keys.size)
+    for i, (k, li) in enumerate(zip(keys_list, lang_indices)):
+        k3 = k[k >= _THREE_GRAM_MIN]
+        if li < 0 or k3.size == 0:
+            continue
+        r3 = model.lookup_rows(k3)
+        r2 = model.lookup_rows(k3 & _PREFIX_MASK)
+        c3 = np.where(r3 >= 0, model.counts[np.maximum(r3, 0), li], 0)
+        c2 = np.where(r2 >= 0, model.counts[np.maximum(r2, 0), li], 0)
+        logp = np.log(c3 + alpha) - np.log(c2 + alpha * V)
+        out[i] = float(np.exp(-logp.mean()))
+    return out
+
+
+def test_perplexity_gather_bitwise_equals_full_matrix():
+    """perplexity through DetectorModel.counts_at is bitwise equal to the
+    old full-matrix formula on the bundled model, and neither the batched
+    nor the scalar LM (nor annotate_batch) builds the counts matrix."""
+    import pickle
+
+    import numpy as np
+
+    from language_detection_spark.config import MAX_TEXT_LENGTH
+    from language_detection_spark.models.factory import load_default_model
+    from language_detection_spark.operators.detector import (
+        _batch_keys,
+        annotate_batch,
+    )
+    from language_detection_spark.operators.perplexity import (
+        perplexity_from_keys,
+        perplexity_many_from_keys,
+    )
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog near the river bank",
+        "le renard brun saute par dessus le chien paresseux du village",
+        "der schnelle braune fuchs springt über den faulen hund am fluss",
+        "el rápido zorro marrón salta sobre el perro perezoso del pueblo",
+        "快速的棕色狐狸跳过了懒狗，然后回到了它在森林里的家。",
+        "быстрая коричневая лиса прыгает через ленивую собаку у реки",
+        "a",
+        "",
+    ]
+    # a freshly unpickled model, as an executor deserializes the broadcast
+    model = pickle.loads(pickle.dumps(load_default_model()))
+    assert model._counts is None
+    keys_list = _batch_keys(texts, MAX_TEXT_LENGTH)
+    # every language slot in turn, plus the "rejected" marker
+    lang_idx = np.array([(7 * i) % len(model.langs) for i in range(len(texts))])
+    lang_idx[-2] = -1
+    got = perplexity_many_from_keys(model, keys_list, lang_idx)
+    scalar = [perplexity_from_keys(model, k, int(li)) if li >= 0 else None
+              for k, li in zip(keys_list, lang_idx)]
+    annotate_batch(model, texts, list(range(len(texts))))
+    assert model._counts is None                    # never materialized
+    want = _perplexity_full_matrix(model, keys_list, lang_idx)
+    assert model._counts is not None                # the reference built it
+    assert np.isfinite(want).sum() >= 5
+    assert got.tobytes() == want.tobytes()
+    assert np.array_equal(
+        np.array([np.nan if p is None else p for p in scalar]), want,
+        equal_nan=True)
+    # the gather itself, over random cells, against the matrix
+    rng = np.random.default_rng(0)
+    rows = rng.integers(0, model.keys.size, 5000)
+    langs = rng.integers(0, len(model.langs), 5000)
+    fresh = pickle.loads(pickle.dumps(model))
+    assert (fresh.counts_at(rows, langs) == model.counts[rows, langs]).all()
+    assert fresh._counts is None
+
+
 def test_draw_prefetch_bitwise_invariant(tiny_model):
     """Posterior outputs are bitwise-identical for any prefetch depth: one
     integers() call of (k, T, g, 5) fills chunk-major in C order, so its

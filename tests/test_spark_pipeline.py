@@ -199,6 +199,18 @@ def test_checkpoint_annotate_per_chunk(spark, tiny_model, multilingual_pages,
     data = spark.read.parquet(f"{out}/data")
     assert data.count() == n_total
     assert summary["buckets_committed_now"] == 8
+    # each chunk's write leaves exactly one file per bucket directory
+    # (hash-partitioning on bucket sends a bucket to one reducer, whatever
+    # AQE coalesces), and the audit reconciles with the data
+    dirs = sorted((tmp_path / "out" / "data").glob("bucket=*"))
+    assert len(dirs) == 8
+    for d in dirs:
+        assert len(list(d.glob("part-*.parquet"))) == 1, d.name
+    audit = spark.read.parquet(f"{out}/audit")
+    assert {r.bucket for r in audit.collect()} == set(range(8))
+    tot = audit.agg(F.sum("rows_in"), F.sum("rows_kept")).first()
+    assert tot[0] == n_total
+    assert tot[1] == data.filter(F.col("keep")).count()
 
 
 def test_trainer_matches_local_update(spark):
