@@ -11,7 +11,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .dedup import md5_int
+from .dedup import md5_int, md5_prefixes, word_grams
 
 # BPE-ish pre-tokenization: letter runs, digit runs, single punctuation
 TOKEN_PAT = r"[A-Za-zÀ-ÿ]+|[0-9]+|[^A-Za-z0-9À-ÿ\s]"
@@ -286,68 +286,30 @@ def holdout_split(df, id_col: str = "doc_id", holdout_permille: int = 100,
     )
 
 
-def word_ngram_hashes(text: Column, n: int) -> Column:
-    """Hashes of whitespace-word n-grams (one per position, occurrence
-    order; empty array for blank docs or docs with < n words).  md5-prefix
-    hashing so an independent engine reproduces every value."""
-    words = F.split(F.trim(text), r"\s+")
-    cnt = F.size(words) - (n - 1)
-    empty = F.array().cast("array<bigint>")
-    return (
-        F.when(F.length(F.trim(text)) == 0, empty)
-        .when(cnt < 1, empty)
-        .otherwise(
-            F.transform(
-                F.sequence(F.lit(1), cnt),
-                lambda i: md5_int(F.concat_ws(" ", F.slice(words, i, n))),
-            )
-        )
-    )
-
-
 def word_ngram_hash_udf(n: int):
-    """Arrow-batched twin of :func:`word_ngram_hashes` — bit-identical
-    values (same ASCII ``\\s+`` split / trim-space semantics as
-    ``dedup.minhash_sig_udf``, same first-15-hex-digits md5 integer),
-    with each DISTINCT gram hashed once per batch.  Catalyst's per-gram
-    md5 → hex-string → conv round trip was the dominant per-row cost of
-    the decontamination and DSIR feature passes; pinned by
-    ``test_word_ngram_hash_udf_matches_expression``."""
-    import hashlib
-    import re
-
+    """text → :func:`~.dedup.md5_int` hashes of its word ``n``-grams
+    (:func:`~.dedup.word_grams`), one per position in occurrence order;
+    NULL for null text, empty for blank text or < n words.  Each DISTINCT
+    gram is hashed once per batch.  Catalyst's per-gram md5 → hex-string
+    → conv round trip was the dominant per-row cost of the decontamination
+    and DSIR feature passes; pinned against a Catalyst expression arbiter
+    by ``test_word_ngram_hash_udf_matches_expression``."""
     from pyspark.sql.types import ArrayType, LongType
-
-    ws_re = re.compile(r"\s+", re.ASCII)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _hashes(texts: pd.Series) -> pd.Series:
-        cache: dict[str, int] = {}
-        out: list[list[int]] = []
+        uniq: dict[str, int] = {}
+        rows: list[list[int] | None] = []
         for t in texts:
             if t is None:
-                out.append(None)  # expression yields NULL on null text
-                continue
-            if len(t.strip(" ")) == 0:
-                out.append([])
-                continue
-            words = ws_re.split(t.strip(" "))
-            cnt = len(words) - (n - 1)
-            if cnt < 1:
-                out.append([])
-                continue
-            row = []
-            for i in range(cnt):
-                g = " ".join(words[i : i + n])
-                h = cache.get(g)
-                if h is None:
-                    h = int(
-                        hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16
-                    )
-                    cache[g] = h
-                row.append(h)
-            out.append(row)
-        return pd.Series(out)
+                rows.append(None)
+            elif not t.strip(" "):
+                rows.append([])
+            else:
+                rows.append([uniq.setdefault(g, len(uniq))
+                             for g in word_grams(t, n)])
+        h = md5_prefixes(uniq)
+        return pd.Series([None if r is None else h[r].tolist() for r in rows])
 
     return _hashes
 
@@ -363,15 +325,12 @@ def decontaminate(train, eval_df, text_col: str = "text",
 
     Scale shape: the EVAL side (benchmarks — KBs to MBs, never the
     corpus) collapses to a distinct hash set and rides a broadcast join;
-    the TRAIN side is a map-side explode of pure expressions (no UDF, no
+    the TRAIN side is a map-side explode of the Arrow n-gram hashes (no
     shuffle of the corpus) followed by a per-doc partial-aggregating
     groupBy.  At 10^12 train rows the plan is scan → project/explode →
     broadcast-hash-join → partial/final agg — one shuffle, keyed by the
     doc id.  No reference analogue (classifier library); this is a
     builder-brief training-data operator."""
-    # Arrow twin of word_ngram_hashes (bit-identical; distinct grams
-    # hashed once per batch) — the Catalyst per-gram md5 round trip was
-    # this operator's dominant cost
     grams = word_ngram_hash_udf(n)(F.col(text_col))
     ev = (
         eval_df.select(F.explode(grams).alias("gh")).distinct()
@@ -567,7 +526,6 @@ def dsir_scores(
 
     from ..plans.caching import persist_tracked
 
-    # Arrow twin of word_ngram_hashes (bit-identical) — see decontaminate
     feats = F.concat(
         word_ngram_hash_udf(1)(F.col(text_col)),
         word_ngram_hash_udf(2)(F.col(text_col)),

@@ -251,12 +251,7 @@ def bpe_merges_df(spark, merges) -> DataFrame:
     )
 
 
-def encode_vocab_bpe(
-    vocab: DataFrame,
-    merges,
-    checkpoint_every: int = 6,
-    engine: str = "arrow",
-) -> DataFrame:
+def encode_vocab_bpe(vocab: DataFrame, merges) -> DataFrame:
     """Apply a learned merge table to a ``(word, …)`` vocabulary table →
     adds ``syms`` and ``n_tokens`` (symbols after all merges, incl. the
     ``</w>`` marker fused into its word-final symbol like training does).
@@ -264,24 +259,11 @@ def encode_vocab_bpe(
     magnitude smaller than the corpus, so encoding cost is
     vocabulary-sized, not corpus-sized.
 
-    ``engine``: "arrow" (default) applies the WHOLE merge table in one
-    Arrow crossing per partition (greedy left-to-right per merge in rank
-    order — the same spec as ``encode_word_local``, plus the JVM quirk
-    that an empty word starts from ``["", "</w>"]``); "sql" chains one
-    pure-JVM fold per merge, ``localCheckpoint``-ed every
-    ``checkpoint_every`` merges so a long table never stacks an
-    unbounded expression tree.  Identical outputs
-    (``test_encode_engines_agree``); one pass beats n_merges column
-    passes ~3× at 24 merges."""
-    if engine == "sql":
-        enc = vocab.withColumn("syms", _initial_symbols(F.col("word")))
-        for j, (_rank, l, r, _cnt) in enumerate(
-            sorted(merges, key=lambda m: m[0]), start=1
-        ):
-            enc = enc.withColumn("syms", _merge_expr(l, r))
-            if j % checkpoint_every == 0:
-                enc = enc.localCheckpoint(eager=True)
-        return enc.withColumn("n_tokens", F.size("syms").cast("bigint"))
+    The WHOLE merge table applies in one Arrow crossing per partition
+    (greedy left-to-right per merge in rank order — the spec of
+    ``encode_word_local``, plus the JVM quirk that an empty word starts
+    from ``["", "</w>"]``); one pass beat chaining one JVM fold per merge
+    ~3× at 24 merges."""
     from pyspark.sql.types import ArrayType, StringType
 
     pairs = [(l, r) for _rank, l, r, _cnt in sorted(merges, key=lambda m: m[0])]

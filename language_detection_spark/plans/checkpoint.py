@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .audit import audit_aggregation
+from .repartition import bucket_col
 
 
 def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
@@ -33,6 +34,23 @@ def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
     return {r.bucket for r in audit.select("bucket").distinct().collect()}
 
 
+def _chunk_audit(written: DataFrame, run_id: str, chunk: list[int]) -> DataFrame:
+    """One audit row per bucket of ``chunk``, also for a bucket that got no
+    rows: it has no written data to aggregate, yet it must commit, or
+    every re-run would write it again.  Its counts and sums are 0."""
+    # a literal array, not createDataFrame(list): scanning a local list
+    # runs Python workers of its own, next to the annotate UDF's
+    ids = written.sparkSession.range(1).select(
+        F.explode(F.array(*[F.lit(b) for b in chunk])).alias("bucket")
+    )
+    return (
+        ids.join(audit_aggregation(written, run_id), "bucket", "left")
+        .fillna(0)  # numeric columns only: the warc_ts bounds stay null
+        .withColumn("run_id", F.lit(run_id))
+        .withColumn("committed_at", F.current_timestamp())
+    )
+
+
 def run_checkpointed(
     source: DataFrame,
     out_dir: str,
@@ -40,24 +58,22 @@ def run_checkpointed(
     chunk_size: int = 64,
     run_id: str | None = None,
     fail_after_chunks: int | None = None,
-    annotate=None,
+    *,
+    annotate,
     bucket_src_col: str = "url",
     drop_columns: tuple[str, ...] = (),
 ) -> dict:
     """Process all not-yet-committed buckets in chunks.
 
-    Two modes:
+    ``source`` is the RAW pages frame and ``annotate`` maps a frame of
+    pages to its annotated rows.  The bucket is computed from
+    ``bucket_src_col`` (url) BEFORE filtering, so each chunk annotates
+    only its own rows: the filter reaches the scan, and the detector runs
+    exactly once per row across the whole job.
 
-    * ``annotate=None`` (legacy): ``source`` is the fully annotated frame
-      (has ``bucket``).  NOTE the chunk filter cannot be pushed below the
-      nondeterministic annotate UDF in this mode, so every chunk re-runs
-      the detector over the FULL input — fine for a single chunk, O(n ×
-      n_chunks) detector work otherwise.
-    * ``annotate=callable``: ``source`` is the RAW pages frame; the bucket
-      is computed from ``bucket_src_col`` (url) BEFORE filtering, so each
-      chunk annotates only its own rows (the filter reaches the scan, the
-      detector runs exactly once per row across the whole job).  This is
-      the mode jobs/run_pipeline.py uses.
+    Every bucket of a chunk gets an audit row when the chunk commits, a
+    bucket that received no rows included (``rows_in`` = 0), so a re-run
+    of a finished job has nothing left to write.
 
     ``fail_after_chunks`` injects a crash after N committed chunks (tests
     exercise the resume path with it).  Returns a summary dict.
@@ -68,24 +84,17 @@ def run_checkpointed(
     todo = [b for b in range(n_buckets) if b not in done]
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    if annotate is not None:
-        from .repartition import bucket_col
-
-        # this bucket is authoritative for the commit protocol; annotate()
-        # implementations must NOT recompute it (QualityFilterPipeline
-        # keeps an existing bucket column for exactly this reason)
-        source = source.withColumn(
-            "bucket", bucket_col(bucket_src_col, n_buckets)
-        )
+    # this bucket is authoritative for the commit protocol; annotate()
+    # implementations must NOT recompute it (QualityFilterPipeline keeps
+    # an existing bucket column for exactly this reason)
+    source = source.withColumn("bucket", bucket_col(bucket_src_col, n_buckets))
 
     chunks = [todo[i : i + chunk_size] for i in range(0, len(todo), chunk_size)]
     n_done = 0
     write_sec = audit_sec = 0.0
-    for ci, chunk in enumerate(chunks):
-        part = source.filter(F.col("bucket").isin(chunk))
-        if annotate is not None:
-            # detector work is per-chunk: only this chunk's rows cross the UDF
-            part = annotate(part)
+    for chunk in chunks:
+        # detector work is per-chunk: only this chunk's rows cross the UDF
+        part = annotate(source.filter(F.col("bucket").isin(chunk)))
         if drop_columns:
             # e.g. the raw text column: the output's canonical text is the
             # scrubbed one — dropping the redundant copy halves write bytes
@@ -107,11 +116,14 @@ def run_checkpointed(
         )
         write_sec += time.time() - t0
         t0 = time.time()
-        written = spark.read.parquet(f"{out_dir}/data").filter(
-            F.col("bucket").isin(chunk)
+        # the schema is given, not inferred: nothing was written yet when
+        # the first chunk's buckets all got no rows
+        written = spark.read.schema(part.schema).parquet(
+            f"{out_dir}/data"
+        ).filter(F.col("bucket").isin(chunk))
+        _chunk_audit(written, run_id, chunk).write.mode("append").parquet(
+            f"{out_dir}/audit"
         )
-        audit = audit_aggregation(written, run_id)
-        audit.write.mode("append").parquet(f"{out_dir}/audit")
         audit_sec += time.time() - t0
         n_done += 1
         if fail_after_chunks is not None and n_done >= fail_after_chunks:

@@ -326,8 +326,9 @@ def q_exact_dup(spark, sf_dir):
 # MinHash signatures (8 perms, word 3-shingles) as scalar columns.
 # One md5 per shingle, then affine permutations folded mod 2^61-1 — the
 # oracle recomputes the identical integer arithmetic (operators/dedup.py
-# affine_perm; bounds keep every intermediate in BIGINT, which DuckDB
-# checks by erroring on overflow rather than wrapping).
+# affine_perm_sql, the fold minhash_sig_udf runs in numpy; bounds keep
+# every intermediate in BIGINT, which DuckDB checks by erroring on
+# overflow rather than wrapping).
 def _minhash_sql(num_perm: int = 8, k: int = 3) -> str:
     from .operators.dedup import _perm_params, affine_perm_sql
 
@@ -1078,13 +1079,13 @@ FROM b GROUP BY doc_id
 
 @register("simhash_values", _SIMHASH_VALUES_SQL)
 def q_simhash_values(spark, sf_dir):
-    from .operators.dedup import simhash_col
+    from .operators.dedup import simhash_udf
 
     from .plans.repartition import parallelize_scan
 
     return (
         parallelize_scan(_docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0))
-        .select("doc_id", simhash_col(F.col("text")).alias("simhash"))
+        .select("doc_id", simhash_udf()(F.col("text")).alias("simhash"))
     )
 
 

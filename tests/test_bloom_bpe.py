@@ -114,23 +114,22 @@ def test_encode_vocab_greedy_order_hand_case(spark):
 
 
 def test_encode_engines_agree(spark):
-    """The one-pass Arrow encoder equals the chained-JVM-fold encoder on
-    every word shape: empty word (JVM split('')→[''] quirk), single char,
-    merge chains, rank-order-dependent merges, unicode, repeats."""
+    """The one-pass Arrow encoder equals the plain-Python spec
+    (``encode_word_local``) on every word shape: single char, merge
+    chains, rank-order-dependent merges, unicode, repeats — and keeps the
+    JVM quirk for the empty word (split('') → ['']), which the spec
+    does not model."""
     words = ["", "a", "aaab", "aaaa", "banana", "é漢字", "abab",
              "the", "thethe", "x"]
     vocab = spark.createDataFrame([(w,) for w in words], "word: string")
     merges = [(1, "a", "a", 9), (2, "aa", "a", 5), (3, "b", "a", 4),
               (4, "t", "h", 3), (5, "th", "e", 2)]
-    a = {r.word: (r.syms, r.n_tokens)
-         for r in encode_vocab_bpe(vocab, merges, engine="arrow").collect()}
-    s = {r.word: (r.syms, r.n_tokens)
-         for r in encode_vocab_bpe(vocab, merges, engine="sql").collect()}
-    assert a == s
-    # non-empty words also match the plain-python spec arbiter
-    for w in words:
-        if w:
-            assert a[w][0] == encode_word_local(w, merges)
+    got = {r.word: (r.syms, r.n_tokens)
+           for r in encode_vocab_bpe(vocab, merges).collect()}
+    assert got[""] == (["", "</w>"], 2)
+    for w in words[1:]:
+        assert got[w][0] == encode_word_local(w, merges), w
+        assert got[w][1] == len(got[w][0]), w
 
 
 def test_bpe_token_stats_matches_local_and_monotone(spark):

@@ -116,10 +116,14 @@ def test_simhash_blocking_full_recall(spark, max_hamming, key_chunks):
 
 
 def test_simhash_col_matches_udf(spark):
-    """The pure-expression simhash (production path) is bit-identical to
-    the Arrow-UDF reference on adversarial inputs: empties, whitespace-only,
-    repeated tokens (occurrence voting), unicode, exact-tie bit votes."""
-    from language_detection_spark.operators.dedup import simhash_col, simhash_udf
+    """The Arrow SimHash (production path) is bit-identical to the
+    Catalyst expression arbiter on adversarial inputs: empties,
+    whitespace-only, repeated tokens (occurrence voting), unicode,
+    exact-tie bit votes, and whitespace that Java's ``\\s`` does NOT
+    split on (U+3000, U+00A0, \\x1c) while Python's ``str.split`` does."""
+    from language_detection_spark.operators.dedup import simhash_udf
+
+    from tests.expr_arbiters import simhash_col
 
     texts = [
         "",
@@ -132,6 +136,10 @@ def test_simhash_col_matches_udf(spark):
         "héllo wörld ünïcode tokens voilà",
         "x y",  # two tokens → every bit vote is a ±1 pair or a 2/0 split
         " leading and trailing  ",
+        "a\u3000b c",                         # ideographic space: one word
+        "a\xa0b c",                           # no-break space: one word
+        "a\x1cb c",                           # file separator: one word
+        "\tlead and trail tabs\t",            # trim keeps tabs: empty fields
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "id int, text string"
@@ -140,24 +148,27 @@ def test_simhash_col_matches_udf(spark):
         r.id: (r.e, r.u)
         for r in df.select(
             "id",
-            simhash_col("text").alias("e"),
+            simhash_col(F.col("text")).alias("e"),
             simhash_udf()(F.col("text")).alias("u"),
         ).collect()
     }
     for i in range(len(texts)):
         e, u = got[i]
-        assert e == u, f"text {i!r}: expr {e} != udf {u}"
+        assert e == u, f"text {i} {texts[i]!r}: expr {e} != udf {u}"
     assert got[0][0] == 0 and got[1][0] == 0
+    # null text: the expression yields NULL, the UDF pins it to 0
+    nul = spark.createDataFrame([(None,)], "text string")
+    assert nul.select(simhash_udf()(F.col("text"))).first()[0] == 0
 
 
 def test_minhash_engines_agree(spark):
-    """The Arrow numpy minhash engine (production default) is bit-identical
-    to the pure-expression engine on adversarial inputs: empties,
+    """The Arrow numpy minhash (production path) is bit-identical to the
+    Catalyst expression arbiter on adversarial inputs: empties,
     whitespace-only, sub-shingle-length docs, leading/trailing separators
     (Java split keeps both-side empty fields at limit=-1), non-space ASCII
     whitespace (trim strips only 0x20), unicode whitespace that must NOT
     split (U+3000), repeated shingles, and multi-byte tokens."""
-    from language_detection_spark.operators.dedup import minhash_signatures
+    from tests.expr_arbiters import minhash_signatures_expr
 
     rows = [
         (0, ""),
@@ -179,15 +190,11 @@ def test_minhash_engines_agree(spark):
     for num_perm in (8, 16):
         a = {
             r.id: r.sig
-            for r in minhash_signatures(
-                df, num_perm=num_perm, engine="arrow"
-            ).collect()
+            for r in minhash_signatures(df, num_perm=num_perm).collect()
         }
         s = {
             r.id: r.sig
-            for r in minhash_signatures(
-                df, num_perm=num_perm, engine="sql"
-            ).collect()
+            for r in minhash_signatures_expr(df, num_perm=num_perm).collect()
         }
         assert a == s
         assert set(a) == {4, 5, 6, 7, 8, 9, 10, 11, 12, 13}
@@ -638,13 +645,12 @@ def test_canonical_url(spark):
 
 def test_shingle_set_udf_matches_expression(spark):
     """The Arrow shingle-set builder (verification-join path) must equal
-    array_distinct(word_shingles(text)) exactly — same split/trim
-    semantics, same first-occurrence order — on the same adversarial
-    inputs the minhash engine-agreement test uses."""
-    from language_detection_spark.operators.dedup import (
-        shingle_set_udf,
-        word_shingles,
-    )
+    the arbiter's array_distinct(word_shingles(text)) exactly — same
+    split/trim semantics, same first-occurrence order — on the same
+    adversarial inputs the minhash engine-agreement test uses."""
+    from language_detection_spark.operators.dedup import shingle_set_udf
+
+    from tests.expr_arbiters import word_shingles
 
     rows = [
         (0, ""), (1, "   "), (2, None), (3, "one two"), (4, "a b c"),
@@ -669,13 +675,14 @@ def test_shingle_set_udf_matches_expression(spark):
 
 
 def test_word_ngram_hash_udf_matches_expression(spark):
-    """The Arrow n-gram hasher must equal word_ngram_hashes exactly —
-    including NULL text -> NULL array, blank -> [], < n words -> [],
-    occurrence order preserved (no dedup in the output)."""
+    """The Arrow n-gram hasher must equal the arbiter's word_ngram_hashes
+    exactly — including NULL text -> NULL array, blank -> [], < n words
+    -> [], occurrence order preserved (no dedup in the output)."""
     from language_detection_spark.operators.text_analysis import (
         word_ngram_hash_udf,
-        word_ngram_hashes,
     )
+
+    from tests.expr_arbiters import word_ngram_hashes
 
     rows = [
         (0, ""), (1, "   "), (2, None), (3, "one two"),

@@ -137,21 +137,24 @@ def test_pipeline_annotate_and_filter(spark, tiny_model, multilingual_pages):
     ann.unpersist()
 
 
+_CKPT_CFG = QualityConfig(lang_allow=("en", "fr", "de"), min_words=10,
+                          min_stopword_hits=0, alpha_word_frac_min=0.5,
+                          mean_word_len_min=2.0)
+
+
 def test_checkpoint_resume(spark, tiny_model, multilingual_pages, tmp_path):
-    cfg = QualityConfig(lang_allow=("en", "fr", "de"), min_words=10,
-                        min_stopword_hits=0, alpha_word_frac_min=0.5,
-                        mean_word_len_min=2.0)
-    opts = PipelineOptions(n_buckets=8)
-    pipe = QualityFilterPipeline(spark, tiny_model, cfg, opts)
-    ann = pipe.annotate(multilingual_pages)
+    pipe = QualityFilterPipeline(spark, tiny_model, _CKPT_CFG,
+                                 PipelineOptions(n_buckets=8))
     out = str(tmp_path / "out")
     # crash after 2 chunks of 2 buckets
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_checkpointed(ann, out, n_buckets=8, chunk_size=2, fail_after_chunks=2)
+        run_checkpointed(multilingual_pages, out, n_buckets=8, chunk_size=2,
+                         fail_after_chunks=2, annotate=pipe.annotate)
     done = committed_buckets(spark, out)
     assert len(done) == 4
     # resume completes the rest; no duplicates afterwards
-    summary = run_checkpointed(ann, out, n_buckets=8, chunk_size=2)
+    summary = run_checkpointed(multilingual_pages, out, n_buckets=8,
+                               chunk_size=2, annotate=pipe.annotate)
     assert summary["buckets_previously_committed"] == 4
     data = spark.read.parquet(f"{out}/data")
     assert data.count() == multilingual_pages.count()
@@ -165,16 +168,45 @@ def test_checkpoint_resume(spark, tiny_model, multilingual_pages, tmp_path):
     assert tot[1] == data.filter(F.col("keep")).count()
 
 
+def test_checkpoint_rerun_commits_empty_buckets(spark, tiny_model,
+                                                multilingual_pages, tmp_path):
+    """A bucket that receives no rows still commits (an audit row with
+    rows_in 0), so re-running a finished job writes nothing — also when
+    the first chunk is all empty and its write leaves no file to read."""
+    from language_detection_spark.plans.repartition import bucket_col
+
+    pipe = QualityFilterPipeline(spark, tiny_model, _CKPT_CFG,
+                                 PipelineOptions(n_buckets=64))
+    pages = multilingual_pages.filter(bucket_col("url", 64) >= 16)
+    out = str(tmp_path / "out")
+    first = run_checkpointed(pages, out, n_buckets=64, chunk_size=16,
+                             annotate=pipe.annotate)
+    assert first["buckets_committed_now"] == 64
+    data = spark.read.parquet(f"{out}/data")
+    with_rows = {r.bucket for r in data.select("bucket").distinct().collect()}
+    assert min(with_rows) >= 16 and len(with_rows) < 48
+    rerun = run_checkpointed(pages, out, n_buckets=64, chunk_size=16,
+                             annotate=pipe.annotate)
+    assert rerun["buckets_previously_committed"] == 64
+    assert rerun["buckets_committed_now"] == 0
+    audit = spark.read.parquet(f"{out}/audit")
+    rows = {r.bucket: r for r in audit.collect()}
+    assert len(rows) == audit.count() == 64
+    for b, r in rows.items():
+        assert (r.rows_in > 0) == (b in with_rows), b
+        assert r.run_id == first["run_id"]
+    tot = audit.agg(F.sum("rows_in"), F.sum("rows_kept")).first()
+    assert tot[0] == data.count() == pages.count() > 0
+    assert tot[1] == data.filter(F.col("keep")).count()
+
+
 def test_checkpoint_annotate_per_chunk(spark, tiny_model, multilingual_pages,
                                        tmp_path):
     """annotate-mode: each chunk's annotate() call sees ONLY that chunk's
     rows (the bucket filter runs on raw pages, below the detector UDF) and
     the union of chunk inputs covers every row exactly once — i.e. the
     detector cost is O(n), not O(n × n_chunks)."""
-    cfg = QualityConfig(lang_allow=("en", "fr", "de"), min_words=10,
-                        min_stopword_hits=0, alpha_word_frac_min=0.5,
-                        mean_word_len_min=2.0)
-    pipe = QualityFilterPipeline(spark, tiny_model, cfg,
+    pipe = QualityFilterPipeline(spark, tiny_model, _CKPT_CFG,
                                  PipelineOptions(n_buckets=8))
     seen_counts: list[int] = []
     seen_urls: list[set] = []
@@ -195,7 +227,6 @@ def test_checkpoint_annotate_per_chunk(spark, tiny_model, multilingual_pages,
     assert max(seen_counts) < n_total                 # never the full input
     all_urls = set().union(*seen_urls)
     assert len(all_urls) == n_total                   # disjoint cover
-    # output identical to legacy whole-frame mode
     data = spark.read.parquet(f"{out}/data")
     assert data.count() == n_total
     assert summary["buckets_committed_now"] == 8

@@ -1,9 +1,11 @@
-"""Dump explain('formatted') physical plans for the headline queries to
-BENCH/plans/*.txt — review artifacts for the plan-shape claims (pushed
-filters, pruned schemas, single ArrowEvalPython, no global windows,
-broadcast joins, zero-exchange bucketed joins).
+"""Dump explain('formatted') physical plans of registry queries to
+BENCH/plans/<query>.txt — review artifacts for the plan-shape claims
+(pushed filters, pruned schemas, single ArrowEvalPython, no global
+windows, broadcast joins, zero-exchange bucketed joins).
 
-    python tools/dump_plans.py [sf_dir]
+    python tools/dump_plans.py [sf_dir] [query ...]
+
+With no query names it dumps the headline queries below.
 """
 
 from __future__ import annotations
@@ -20,8 +22,8 @@ PLAN_QUERIES = [
     "similarity_topk",         # two-phase windows (no global per-query)
     "ann_lsh_topk",            # bucket join + probes
     "ann_ivf_topk",            # centroid lists
-    "minhash_near_dups",       # banded join + bucket caps + verify join
-    "simhash_near_dups",       # chunk-blocked self-join
+    "minhash_near_dups",       # band buckets + bucket caps + verify join
+    "simhash_near_dups",       # chunk-blocked buckets
     "orders_by_region",        # broadcast join chain
     "lineitem_pricing_summary",  # partial+final hash agg
 ]
@@ -29,20 +31,25 @@ PLAN_QUERIES = [
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    names = sys.argv[2:] or PLAN_QUERIES
     from language_detection_spark.config import get_spark
     from language_detection_spark.queries import queries
 
     out_dir = ROOT / "BENCH" / "plans"
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark("dump-plans")
+    spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
-    for name in PLAN_QUERIES:
-        df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+    for name in names:
+        try:
+            df = qs[name](spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+        except Exception as exc:  # one bad query must not stop the dump
+            plan = f"PLAN DUMP FAILED: {exc!r}\n"
         (out_dir / f"{name}.txt").write_text(plan)
-        print(f"wrote plans/{name}.txt ({len(plan)} chars)")
+        print(f"wrote BENCH/plans/{name}.txt ({len(plan)} chars)")
     spark.stop()
     return 0
 
