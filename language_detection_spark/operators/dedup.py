@@ -14,8 +14,9 @@ Language Models Better") expressed Spark-first:
   (band, band_hash) bucket that expands its members into pairs — capped
   buckets, no O(n²) join; verification joins shingle sets only for
   candidate pairs.
-* simhash64 — 64-bit sign-aggregated token fingerprint (Arrow-batched
-  numpy UDF; Hamming-ball grouping for near-dup).
+* simhash_udf / simhash_near_dup_pairs — 60-bit sign-aggregated token
+  fingerprint (Arrow-batched numpy UDF over md5_int token hashes), then
+  pigeonhole chunk blocking and an exact Hamming check.
 * jaccard_for_pairs — exact word-n-gram Jaccard for candidate pairs.
 * connected_components / near_dup_clusters — alternating large-star/
   small-star (Kiveris et al. 2014) turning the pair graph into canonical
@@ -24,8 +25,17 @@ Language Models Better") expressed Spark-first:
   signature store for continuous-crawl dedup: only the new batch is ever
   shingled; pairs verify by signature-estimated Jaccard.
 
-All operators key documents by an id column and never collect to the
-driver (the CC convergence test reads one 3-value checksum row per round).
+The three candidate generators (lsh_candidate_pairs,
+simhash_pairs_from_hashes, incremental_near_dups) share one bucket-cap
+policy, :func:`_capped_buckets`; ``max_bucket_size`` must be a positive
+int there and in every wrapper (``None`` raises ValueError).
+
+All operators key documents by an id column.  What reaches the driver is
+small and bounded: counts (connected_components' engine choice,
+exact_substring_dedup's join choice), one 3-value checksum row per CC
+round, and — while an ``incremental_near_dups`` plan with
+``store_buckets`` is built — the batch's bucket ids (<= store_buckets
+values) and at most 1025 band hashes.
 """
 
 from __future__ import annotations
@@ -290,69 +300,100 @@ def banded_rows(
     ).select("id", "sig", "bb.band", "bb.band_hash")
 
 
+def _check_cap(max_bucket_size: int) -> None:
+    if not isinstance(max_bucket_size, int) or max_bucket_size < 1:
+        raise ValueError(
+            f"max_bucket_size must be a positive int, got {max_bucket_size!r}"
+        )
+
+
+def _capped_buckets(
+    rows: DataFrame, keys: list[str], max_bucket_size: int,
+    *member_aggs: Column,
+) -> DataFrame:
+    """One row per ``keys`` bucket of at most ``max_bucket_size`` members:
+    ``_sz`` plus the caller's member aggregations (the arrays its pair
+    expansion reads), repartitioned on the bucket key.
+
+    The shared cap policy of every bucket-aggregation candidate generator:
+
+    * one groupBy per bucket, not a size aggregate + join + self-join
+      (three exchanges, and the cap subtree duplicated per join branch);
+    * ``max_bucket_size`` drops over-full buckets before the in-bucket pair
+      expansion: at web scale a boilerplate cluster (error pages, parked
+      domains) can put millions of documents in one bucket and make the
+      expansion quadratic; such clusters are better handled by exact dedup
+      upstream.  Over-cap buckets are still collected before the filter;
+      their transient agg buffers spill via Spark's sort-based aggregation
+      fallback rather than joining the candidate stream;
+    * keyed repartition to cluster parallelism: AQE coalesces the groupBy
+      exchange by BYTES, but the pair expansion is quadratic per bucket —
+      byte-based coalescing serializes it onto a handful of tasks.
+      Keyed on the bucket (deterministic, no sort-before-repartition); one
+      extra pass over bucket rows, which are far fewer than the candidate
+      pairs they expand into.
+
+    ``max_bucket_size`` must be a positive int: ``None`` (no cap) would
+    make ``_sz <= NULL`` drop every bucket, and an uncapped bucket is the
+    unbounded O(m²) expansion the cap exists to prevent."""
+    _check_cap(max_bucket_size)
+    grouped = (
+        rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_sz"), *member_aggs)
+        .filter(F.col("_sz") <= max_bucket_size)
+    )
+    return grouped.repartition(
+        grouped.sparkSession.sparkContext.defaultParallelism, *keys
+    )
+
+
+def _ordered_pairs(ms: str, make_pair) -> Column:
+    """``make_pair(x, y)`` for every i < j pair of the sorted array column
+    ``ms``, exploded one row per pair (alias ``p``): sorted members give
+    each unordered pair once, with x < y."""
+    n = F.size(ms)
+    return F.explode(
+        F.flatten(
+            F.transform(
+                F.col(ms),
+                lambda x, i: F.transform(
+                    F.slice(F.col(ms), i + F.lit(2), n - i - 1),
+                    lambda y: make_pair(x, y),
+                ),
+            )
+        )
+    ).alias("p")
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame,
     bands: int = 4,
     rows_per_band: int = 4,
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Band the signature, group by (band, band_hash) and expand each
     bucket's sorted members → (id_a, id_b) candidate pairs (id_a < id_b),
-    deduplicated across bands.
-
-    ``max_bucket_size`` drops over-full buckets before the in-bucket pair
-    expansion: at web scale a boilerplate cluster (error pages, parked
-    domains) can put millions of documents in one bucket and make the
-    expansion quadratic; such clusters are better handled by exact dedup
-    upstream."""
+    deduplicated across bands.  Buckets over ``max_bucket_size`` members
+    are dropped (see :func:`_capped_buckets`)."""
     banded = banded_rows(sigs, bands, rows_per_band).select(
         "id", "band", "band_hash"
     )
-    # One groupBy per bucket instead of the former size-aggregate + join +
-    # self-join (three exchanges + duplicated cap subtree per join branch):
-    # members collect into a sorted array — bounded by the bucket cap for
-    # every SURVIVING bucket — and pairs expand in-bucket with id_a < id_b
-    # from the sort order.  Over-cap (boilerplate) buckets are dropped by
-    # the same count filter as before; their transient agg buffers spill
-    # via Spark's sort-based aggregation fallback rather than joining the
-    # candidate stream, which is the right trade at web scale where such
-    # buckets are pathological and rare.
-    grouped = banded.groupBy("band", "band_hash").agg(
-        F.count(F.lit(1)).alias("_sz"),
+    grouped = _capped_buckets(
+        banded, ["band", "band_hash"], max_bucket_size,
         F.sort_array(F.collect_list("id")).alias("ms"),
     )
-    if max_bucket_size is not None:
-        grouped = grouped.filter(F.col("_sz") <= max_bucket_size)
-    # keyed repartition to cluster parallelism: AQE coalesces the groupBy
-    # exchange by BYTES, but the in-bucket pair expansion below is
-    # quadratic per bucket — byte-based coalescing was serializing it
-    # onto a handful of tasks.  Keyed on the bucket (deterministic, no
-    # sort-before-repartition); one extra pass over bucket rows, which
-    # are far fewer than the candidate pairs they expand into.
-    grouped = grouped.repartition(
-        grouped.sparkSession.sparkContext.defaultParallelism,
-        "band", "band_hash",
-    )
-    n = F.size("ms")
     return (
-        grouped.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ms"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ms"), i + F.lit(2), n - i - 1),
-                            lambda y: F.struct(
-                                x.alias("id_a"), y.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+        grouped.select(_ordered_pairs(
+            "ms", lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
+        ))
         .select("p.id_a", "p.id_b")
         .distinct()
     )
+
+
+# Above this many input partitions jaccard_for_pairs builds shingle sets
+# only for candidate documents (see there).
+_SEMI_FILTER_MIN_PARTITIONS = 256
 
 
 def jaccard_for_pairs(
@@ -361,13 +402,14 @@ def jaccard_for_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_k: int = 3,
-    semi_filter: bool | None = None,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs (verification join).
 
-    ``semi_filter`` controls the scale shape of the set build:
+    The set build takes one of two scale shapes, chosen by the width of
+    the input scan (>= ``_SEMI_FILTER_MIN_PARTITIONS`` partitions
+    indicates a large corpus):
 
-    * True — shingle sets are built ONLY for documents appearing in a
+    * wide — shingle sets are built ONLY for documents appearing in a
       candidate pair (broadcast left-semi on the pair ids, then the small
       filtered frame is persisted and shared by the id_a/id_b joins).
       At web scale candidates are a vanishing fraction of the corpus, so
@@ -375,13 +417,9 @@ def jaccard_for_pairs(
       serialize the set build behind candidate generation and adds two
       small shuffles — measurable overhead on toy corpora (A/B at sf0.1:
       ~+40% on a 5k-doc table, where the shingle savings are nil).
-    * False — sets derive straight from ``df`` (the build fuses into the
-      two verify joins; no extra stages).  Right below ~10^6 docs.
-    * None (default) — auto: True when the input scan is wide enough to
-      indicate a large corpus (>= 256 partitions), else False."""
-    if semi_filter is None:
-        semi_filter = df.rdd.getNumPartitions() >= 256
-    if semi_filter:
+    * narrow — sets derive straight from ``df`` (the build fuses into the
+      two verify joins; no extra stages).  Right below ~10^6 docs."""
+    if df.rdd.getNumPartitions() >= _SEMI_FILTER_MIN_PARTITIONS:
         ids = (
             pairs.select(F.col("id_a").alias("id"))
             .unionByName(pairs.select(F.col("id_b").alias("id")))
@@ -429,19 +467,17 @@ def minhash_dedup_pairs(
     bands: int = 4,
     shingle_k: int = 3,
     threshold: float = 0.8,
-    semi_filter: bool | None = None,
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Full near-dup pipeline: signatures → LSH candidates → exact-Jaccard
-    verify → pairs ≥ threshold.  ``semi_filter``: see jaccard_for_pairs;
-    ``max_bucket_size``: see lsh_candidate_pairs (boilerplate-cluster cap)."""
+    verify → pairs ≥ threshold.  ``max_bucket_size``: see
+    lsh_candidate_pairs (boilerplate-cluster cap)."""
     rows_per_band = num_perm // bands
     # no persist: the bucket-agg candidate generator reads the signatures
     # exactly once (the former self-join topology read them three times)
     sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_k)
     cand = lsh_candidate_pairs(sigs, bands, rows_per_band, max_bucket_size)
-    verified = jaccard_for_pairs(cand, df, text_col, id_col, shingle_k,
-                                 semi_filter=semi_filter)
+    verified = jaccard_for_pairs(cand, df, text_col, id_col, shingle_k)
     return verified.filter(F.col("jaccard") >= threshold)
 
 
@@ -456,44 +492,44 @@ def simhash_udf():
     Tokens are the non-empty words of :func:`split_words`; each token
     hash is :func:`md5_prefixes` (60 bits), every occurrence votes (no
     dedup), and bit j of the output is set iff strictly more tokens have
-    bit j set than clear.  Null, empty and whitespace-only text → 0.  The
-    md5 calls are batched across the whole Arrow batch (one call over the
-    flat token stream), never per document; the Catalyst md5 → hex-string
-    → conv(…,16,10) round trip per token cost ~5× this path (100k docs:
-    3.3 s vs 0.7 s)."""
+    bit j set than clear.  Null, empty and whitespace-only text → 0.  Each
+    DISTINCT token of the Arrow batch is hashed once (one md5_prefixes
+    call per batch; web text repeats its words, so this is far fewer md5s
+    than occurrences), and occurrences vote through their token's index;
+    the Catalyst md5 → hex-string → conv(…,16,10) round trip per token
+    cost ~5× the per-occurrence version of this path (100k docs: 3.3 s vs
+    0.7 s)."""
 
     @F.pandas_udf(LongType())
     def _simhash(texts: pd.Series) -> pd.Series:
         out = np.zeros(len(texts), dtype=np.int64)
-        # tokenize the whole batch, hash once over the flat token stream
-        toks = [
-            [] if t is None else list(filter(None, split_words(t)))
-            for t in texts
-        ]
-        flat = [w for ws in toks for w in ws]
-        if not flat:
-            return pd.Series(out)
-        hs_flat = md5_prefixes(flat)
-        pos = 0
-        for i, ws in enumerate(toks):
-            if not ws:
+        uniq: dict[str, int] = {}
+        docs = []  # (row, unique-token index per token occurrence)
+        for i, t in enumerate(texts):
+            if t is None:
                 continue
-            hs = hs_flat[pos : pos + len(ws)]
-            pos += len(ws)
-            bits = (hs[:, None] >> np.arange(_SIMHASH_BITS)) & 1  # (n, 60)
-            score = (2 * bits - 1).sum(axis=0)
-            out[i] = int(((score > 0).astype(np.int64) << np.arange(_SIMHASH_BITS)).sum())
+            occ = [uniq.setdefault(w, len(uniq)) for w in split_words(t) if w]
+            if occ:
+                docs.append((i, occ))
+        if not docs:
+            return pd.Series(out)
+        bit = np.arange(_SIMHASH_BITS)
+        # +1/-1 vote of each distinct token on each bit: (U, 60)
+        votes = 2 * ((md5_prefixes(uniq)[:, None] >> bit) & 1) - 1
+        for i, occ in docs:
+            score = votes[occ].sum(axis=0)
+            out[i] = int(((score > 0).astype(np.int64) << bit).sum())
         return pd.Series(out)
 
     return _simhash
 
 
-def _simhash_chunks(n_tables: int, bits: int = _SIMHASH_BITS) -> list[tuple[int, int]]:
-    """(offset, width) for ``n_tables`` disjoint chunks covering ``bits``
+def _simhash_chunks(n_chunks: int, bits: int = _SIMHASH_BITS) -> list[tuple[int, int]]:
+    """(offset, width) for ``n_chunks`` disjoint chunks covering ``bits``
     bits, widths as even as possible (floor/ceil split)."""
-    base, extra = divmod(bits, n_tables)
+    base, extra = divmod(bits, n_chunks)
     out, off = [], 0
-    for t in range(n_tables):
+    for t in range(n_chunks):
         width = base + (1 if t < extra else 0)
         out.append((off, width))
         off += width
@@ -502,16 +538,15 @@ def _simhash_chunks(n_tables: int, bits: int = _SIMHASH_BITS) -> list[tuple[int,
 
 def simhash_near_dup_pairs(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    max_hamming: int = 3, n_tables: int | None = None,
-    max_bucket_size: int | None = 1000, key_chunks: int = 1,
+    max_hamming: int = 3, max_bucket_size: int = 1000, key_chunks: int = 1,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: block on ``n_tables`` disjoint bit chunks,
-    verify Hamming distance exactly via bit_count(xor).
+    """Near-dup pairs by SimHash: block on ``max_hamming + key_chunks``
+    disjoint bit chunks, verify Hamming distance exactly via
+    bit_count(xor).
 
     Recall guarantee (pigeonhole): a pair within Hamming distance h differs
-    in at most h chunks, so with ``n_tables >= h + 1`` disjoint chunks at
-    least one chunk is identical → the pair is ALWAYS a candidate.  Default
-    ``n_tables = max_hamming + 1`` keeps that guarantee for any h.
+    in at most h chunks, so with h + 1 disjoint chunks at least one chunk
+    is identical → the pair is ALWAYS a candidate.
 
     Scale note: wider h ⇒ more, narrower chunks ⇒ bigger buckets.  As with
     MinHash LSH, ``max_bucket_size`` drops degenerate buckets (boilerplate
@@ -524,20 +559,20 @@ def simhash_near_dup_pairs(
     # times)
     h = df.select(F.col(id_col).alias("id"),
                   simhash_udf()(F.col(text_col)).alias("sh"))
-    return simhash_pairs_from_hashes(h, max_hamming, n_tables, max_bucket_size,
+    return simhash_pairs_from_hashes(h, max_hamming, max_bucket_size,
                                      key_chunks=key_chunks)
 
 
 def simhash_pairs_from_hashes(
     h: DataFrame,
     max_hamming: int = 3,
-    n_tables: int | None = None,
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int = 1000,
     key_chunks: int = 1,
     bits: int = _SIMHASH_BITS,
 ) -> DataFrame:
     """Blocked near-dup join over precomputed (id, sh) SimHash rows — see
-    simhash_near_dup_pairs for the recall guarantee.
+    simhash_near_dup_pairs for the recall guarantee.  Buckets over
+    ``max_bucket_size`` members are dropped (see :func:`_capped_buckets`).
 
     ``key_chunks`` (m) generalizes the pigeonhole blocking for SCALE at
     high Hamming radius (the Manku-2007 multi-block-key idea): split the
@@ -555,19 +590,7 @@ def simhash_pairs_from_hashes(
     SimHash (md5-derived), 64 for image perceptual hashes (image_dhash)."""
     if key_chunks < 1:
         raise ValueError("key_chunks must be >= 1")
-    if n_tables is not None and key_chunks > 1:
-        raise ValueError(
-            "n_tables and key_chunks>1 are mutually exclusive: multi-chunk "
-            "blocking fixes the table count at C(max_hamming+key_chunks, "
-            "key_chunks); pass one knob or the other"
-        )
-    if n_tables is not None and key_chunks == 1 and n_tables < max_hamming + 1:
-        raise ValueError(
-            f"n_tables={n_tables} cannot guarantee recall at Hamming "
-            f"{max_hamming}; need >= {max_hamming + 1}"
-        )
-    k = (n_tables if (n_tables is not None and key_chunks == 1)
-         else max_hamming + key_chunks)
+    k = max_hamming + key_chunks
     chunks = _simhash_chunks(k, bits=bits)
     if key_chunks == 1:
         combos = [(i,) for i in range(k)]
@@ -606,48 +629,18 @@ def simhash_pairs_from_hashes(
             )
         ).alias("bb"),
     ).select("id", "sh", "bb.tbl", "bb.blk")
-    # One groupBy per bucket instead of the former size-aggregate + join +
-    # blocked self-join (the plan duplicated the explode + cap subtree per
-    # join branch and sorted both sides): members collect into one sorted
-    # array per bucket — bounded by the cap for every surviving bucket —
-    # and pairs expand in-bucket with id_a < id_b from the sort order.
-    # Over-cap buckets drop exactly as before; their transient agg buffers
-    # ride Spark's sort-based aggregation fallback instead of flowing into
-    # the join.  Same (id_a, id_b, hamming) set (pinned by the exact
-    # all-pairs oracle and test_simhash_blocking_exact_recall).
-    grouped = blocked.groupBy("tbl", "blk").agg(
-        F.count(F.lit(1)).alias("_sz"),
+    # same (id_a, id_b, hamming) set as an all-pairs Hamming join (pinned
+    # by the exact all-pairs oracle and test_simhash_blocking_full_recall)
+    grouped = _capped_buckets(
+        blocked, ["tbl", "blk"], max_bucket_size,
         F.sort_array(F.collect_list(F.struct("id", "sh"))).alias("ms"),
     )
-    if max_bucket_size is not None:
-        grouped = grouped.filter(F.col("_sz") <= max_bucket_size)
-    # keyed repartition to cluster parallelism — see lsh_candidate_pairs:
-    # the pair expansion is quadratic per bucket; AQE's byte-based
-    # coalescing must not serialize it onto a handful of tasks
-    grouped = grouped.repartition(
-        grouped.sparkSession.sparkContext.defaultParallelism, "tbl", "blk"
-    )
-    n = F.size("ms")
     return (
-        grouped.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ms"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ms"), i + F.lit(2), n - i - 1),
-                            lambda y: F.struct(
-                                x["id"].alias("id_a"),
-                                y["id"].alias("id_b"),
-                                F.bit_count(
-                                    x["sh"].bitwiseXOR(y["sh"])
-                                ).alias("hamming"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+        grouped.select(_ordered_pairs("ms", lambda x, y: F.struct(
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            F.bit_count(x["sh"].bitwiseXOR(y["sh"])).alias("hamming"),
+        )))
         .select("p.id_a", "p.id_b", "p.hamming")
         # filter BEFORE distinct: the Hamming test kills ~all candidates,
         # so the dedup aggregation sees survivors only (orders of magnitude
@@ -1300,6 +1293,11 @@ def compact_sig_store(
     }
 
 
+# An incremental probe with at most this many distinct band hashes pushes
+# them into the store scan as a literal In filter (see incremental_near_dups).
+_PROBE_PUSHDOWN_MAX_HASHES = 1024
+
+
 def incremental_near_dups(
     new_docs: DataFrame,
     store: DataFrame,
@@ -1309,25 +1307,24 @@ def incremental_near_dups(
     bands: int = 4,
     shingle_k: int = 3,
     threshold_est: float = 0.5,
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int = 1000,
     store_buckets: int | None = None,
-    probe_pushdown_max_hashes: int = 1024,
     store_path: str | None = None,
 ) -> DataFrame:
     """New-vs-store near-dup pairs: (id_new, id_old, est_jaccard).
 
     The continuous-crawl shape: only the NEW batch is shingled and hashed;
     the store side is the persisted banded rows from ``build_sig_store``.
-    Candidates come from an equi-join on (band, band_hash) — co-partitioned
-    by the store's band partitioning, never quadratic — and are verified
-    by the signature-estimated Jaccard (fraction of equal minhash
-    components; the standard store-side verification, since the store
-    keeps signatures, not shingle sets).  E[est] = true Jaccard with
-    sd ≈ sqrt(J(1-J)/num_perm).
+    Candidates come from one aggregation per (band, band_hash) bucket over
+    the new and store banded rows together, expanded as the bucket's
+    new x store cross, and are verified by the signature-estimated
+    Jaccard (fraction of equal minhash components; the standard
+    store-side verification, since the store keeps signatures, not
+    shingle sets).  E[est] = true Jaccard with sd ≈ sqrt(J(1-J)/num_perm).
 
     ``max_bucket_size`` drops (band, band_hash) buckets whose combined
-    new+store membership exceeds the cap (boilerplate guard, same
-    rationale as lsh_candidate_pairs).  New-batch ids must be disjoint
+    new+store membership exceeds the cap (boilerplate guard, see
+    :func:`_capped_buckets`).  New-batch ids must be disjoint
     from store ids.
 
     ``store_buckets`` (must match the value the store was built with —
@@ -1338,10 +1335,14 @@ def incremental_near_dups(
     scan's PartitionFilters, and every store read below (bucket sizes,
     candidate join, signature verification) sees only the pruned frame —
     so probe cost tracks the batch's hash coverage, not the store size.
+    A batch of at most ``_PROBE_PUSHDOWN_MAX_HASHES`` distinct band hashes
+    also pushes them into the store scan as a literal In filter.
 
     Pass ``store_path`` (the directory the store was read from) to
     validate ``store_buckets`` against the store's stamped metadata —
     a wrong modulus silently prunes matching rows, so the check raises."""
+    # before the store-bucket probe below runs its jobs
+    _check_cap(max_bucket_size)
     if store_path is not None:
         # validate the probe modulus against the store's stamped metadata
         # — a wrong store_buckets prunes away MATCHING rows silently
@@ -1380,31 +1381,22 @@ def incremental_near_dups(
             r[0]
             for r in new_banded.select("band_hash")
             .distinct()
-            .limit(probe_pushdown_max_hashes + 1)
+            .limit(_PROBE_PUSHDOWN_MAX_HASHES + 1)
             .collect()
         ]
-        if len(hashes) <= probe_pushdown_max_hashes:
+        if len(hashes) <= _PROBE_PUSHDOWN_MAX_HASHES:
             store = store.filter(F.col("band_hash").isin(hashes))
     store_banded = store.select("id", "band", "band_hash")
-    # one tagged groupBy per bucket instead of the former combined-size
-    # aggregate + two joins + new-vs-store equi-join (same restructure as
-    # lsh_candidate_pairs): new and store members collect side-by-side,
-    # the combined-size cap filters identically, and candidates expand
-    # in-bucket as the new x store cross.  The keyed repartition keeps
-    # AQE's byte-based coalescing from serializing the expansion.
+    # new and store members collect side-by-side in one tagged bucket
+    # aggregation; the cap counts them together, and candidates expand
+    # in-bucket as the new x store cross
     tagged = new_banded.withColumn("_new", F.lit(True)).unionAll(
         store_banded.withColumn("_new", F.lit(False))
     )
-    grouped = tagged.groupBy("band", "band_hash").agg(
-        F.count(F.lit(1)).alias("_sz"),
+    grouped = _capped_buckets(
+        tagged, ["band", "band_hash"], max_bucket_size,
         F.collect_list(F.when(F.col("_new"), F.col("id"))).alias("nids"),
         F.collect_list(F.when(~F.col("_new"), F.col("id"))).alias("oids"),
-    )
-    if max_bucket_size is not None:
-        grouped = grouped.filter(F.col("_sz") <= max_bucket_size)
-    grouped = grouped.repartition(
-        grouped.sparkSession.sparkContext.defaultParallelism,
-        "band", "band_hash",
     )
     cand = (
         grouped.select(

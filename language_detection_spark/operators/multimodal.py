@@ -630,7 +630,7 @@ def image_near_dup_pairs(
     df: DataFrame,
     max_hamming: int = 6,
     key_chunks: int = 2,
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int = 1000,
     id_col: str = "media_id",
     payload_col: str = "payload",
 ) -> DataFrame:
@@ -784,7 +784,7 @@ def audio_near_dup_pairs(
     df: DataFrame,
     max_hamming: int = 6,
     key_chunks: int = 2,
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int = 1000,
     id_col: str = "media_id",
     payload_col: str = "payload",
 ) -> DataFrame:
@@ -944,7 +944,7 @@ def video_near_dup_pairs(
     max_hamming: int = 6,
     min_matched_frames: int = 2,
     key_chunks: int = 2,
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Video near-dup pairs ``(id_a, id_b, n_matched_frames)``: sampled
     frames become items of the Manku bits=64 banded join (frame identity

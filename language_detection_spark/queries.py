@@ -1091,7 +1091,7 @@ def q_simhash_values(spark, sf_dir):
 
 # SimHash near-dup pairs — the oracle is the EXACT all-pairs Hamming ball
 # (O(n²) is fine at oracle scale), so it checks the blocking scheme's
-# recall, not just the arithmetic: n_tables = max_hamming+1 disjoint
+# recall, not just the arithmetic: max_hamming + key_chunks disjoint
 # chunks guarantee every pair within the ball is a candidate (pigeonhole).
 _SIMHASH_PAIRS_SQL = f"""
 WITH sv AS ({_SIMHASH_VALUES_SQL})
@@ -4333,25 +4333,3 @@ def q_robots_allowed_urls(spark, sf_dir):
     urls = synth_crawl_urls(_docs(spark, sf_dir))
     rules = robots_rules(synth_robots_df(urls), agent="trainingbot")
     return robots_allowed(urls, rules).orderBy("doc_id")
-
-
-# --- driver-window registration order ---------------------------------------
-# The round-6 correctness sweep recorded driver rows for only the FIRST 50
-# registered queries, leaving everything registered after dsir_scores (the
-# 28 round-6 operators) without the hard driver signal.  Registration
-# order is not part of any contract surface (names, callables and oracle
-# SQL are untouched) — so put the previously unchecked queries at the
-# front of any capped sweep window and the multi-round-green veterans
-# behind them.
-def _front_load_unverified(after: str = "dsir_scores") -> None:
-    names = list(_REGISTRY)
-    if after not in names:
-        return
-    cut = names.index(after) + 1
-    front = names[cut:]
-    reordered = {n: _REGISTRY[n] for n in front + names[:cut]}
-    _REGISTRY.clear()
-    _REGISTRY.update(reordered)
-
-
-_front_load_unverified()

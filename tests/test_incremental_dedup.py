@@ -265,14 +265,14 @@ def test_incremental_equals_batch_cross_pairs(spark, texts):
         (r["id_new"], r["id_old"]): r["est_jaccard"]
         for r in incremental_near_dups(
             new, banded_rows(minhash_signatures(old)),
-            threshold_est=0.0, max_bucket_size=None,
+            threshold_est=0.0, max_bucket_size=len(rows),
         ).collect()
     }
 
     sigs = {r["id"]: r["sig"]
             for r in minhash_signatures(df).collect()}
     cand = lsh_candidate_pairs(
-        minhash_signatures(df), max_bucket_size=None
+        minhash_signatures(df), max_bucket_size=len(rows)
     ).collect()
     expected = {}
     for r in cand:

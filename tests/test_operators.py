@@ -161,6 +161,40 @@ def test_simhash_col_matches_udf(spark):
     assert nul.select(simhash_udf()(F.col("text"))).first()[0] == 0
 
 
+def test_simhash_udf_hashes_each_distinct_token_once(spark, monkeypatch):
+    """One md5 per DISTINCT non-empty token of the batch, not one per
+    occurrence; the values still match a per-occurrence reference."""
+    from language_detection_spark.operators import dedup
+
+    texts = pd.Series([
+        "a b a b a", None, "", "   ", "b c\tc", "\tlead tab", "a\u3000b a",
+    ])
+    md5_prefixes = dedup.md5_prefixes
+    hashed = []
+
+    def _recording(strings):
+        hashed.extend(strings)
+        return md5_prefixes(strings)
+
+    monkeypatch.setattr(dedup, "md5_prefixes", _recording)
+    got = dedup.simhash_udf().func(texts)
+    tokens = [w for t in texts if t is not None
+              for w in dedup.split_words(t) if w]
+    assert sorted(hashed) == sorted(set(tokens))
+
+    def _reference(t):
+        ws = [w for w in dedup.split_words(t) if w] if t is not None else []
+        if not ws:
+            return 0
+        votes = np.zeros(dedup._SIMHASH_BITS, dtype=np.int64)
+        for h in md5_prefixes(ws):
+            votes += [1 if h >> j & 1 else -1
+                      for j in range(dedup._SIMHASH_BITS)]
+        return sum(1 << j for j in range(dedup._SIMHASH_BITS) if votes[j] > 0)
+
+    assert got.tolist() == [_reference(t) for t in texts]
+
+
 def test_minhash_engines_agree(spark):
     """The Arrow numpy minhash (production path) is bit-identical to the
     Catalyst expression arbiter on adversarial inputs: empties,
@@ -200,14 +234,6 @@ def test_minhash_engines_agree(spark):
         assert set(a) == {4, 5, 6, 7, 8, 9, 10, 11, 12, 13}
 
 
-def test_simhash_under_tabled_raises(spark):
-    from language_detection_spark.operators.dedup import simhash_pairs_from_hashes
-
-    h = spark.createDataFrame([(0, 5)], "id bigint, sh bigint")
-    with pytest.raises(ValueError):
-        simhash_pairs_from_hashes(h, max_hamming=8, n_tables=4)
-
-
 def test_classify_batch_equals_per_doc():
     """FastLangID.classify_batch (one batched extraction + one model
     lookup) must be BIT-identical to per-doc classify — labels and
@@ -236,16 +262,6 @@ def test_classify_batch_equals_per_doc():
         lang_1, conf_1 = fast.classify(t)
         assert langs_b[i] == lang_1, (i, t)
         assert confs_b[i] == conf_1, (i, t)  # bitwise, not approx
-
-
-def test_simhash_conflicting_knobs_raise(spark):
-    """n_tables with key_chunks>1 is a contradiction (multi-chunk blocking
-    fixes the table count) — must raise, not silently ignore n_tables."""
-    from language_detection_spark.operators.dedup import simhash_pairs_from_hashes
-
-    h = spark.createDataFrame([(0, 5)], "id bigint, sh bigint")
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        simhash_pairs_from_hashes(h, max_hamming=3, n_tables=9, key_chunks=2)
 
 
 def test_release_tracked_caches_actually_releases(spark, dup_docs):
@@ -521,16 +537,23 @@ def test_resize_media_stage(spark):
     assert {r.media_id: r.pixels for r in rows} == again
 
 
-def test_minhash_semi_filter_path_identical(spark, dup_docs):
+def test_minhash_semi_filter_path_identical(spark, dup_docs, monkeypatch):
     """The scale-shape verification (broadcast semi-filter on candidate
     ids + persisted set frame) returns exactly the same verified pairs as
-    the fused small-scale path."""
-    plain = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-             minhash_dedup_pairs(dup_docs, threshold=0.5,
-                                 semi_filter=False).collect()}
-    semi = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-            minhash_dedup_pairs(dup_docs, threshold=0.5,
-                                semi_filter=True).collect()}
+    the fused small-scale path; the partition threshold picks the path."""
+    from language_detection_spark.operators import dedup
+
+    def _pairs(min_partitions):
+        monkeypatch.setattr(dedup, "_SEMI_FILTER_MIN_PARTITIONS",
+                            min_partitions)
+        out = minhash_dedup_pairs(dup_docs, threshold=0.5)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return plan, {(r.id_a, r.id_b, round(r.jaccard, 9))
+                      for r in out.collect()}
+
+    plain_plan, plain = _pairs(10**9)
+    semi_plan, semi = _pairs(1)
+    assert "LeftSemi" not in plain_plan and "LeftSemi" in semi_plan
     assert plain == semi and plain
 
 

@@ -82,13 +82,14 @@ def test_minhash_skewed_boilerplate_bounded_with_full_recall(spark):
     assert len(planted) == 20
 
     # leg 1: exact dedup first — the boilerplate cluster collapses to ONE
-    # representative, so LSH sees no degenerate bucket at all
+    # representative, so LSH sees no degenerate bucket at all (a cap of
+    # the corpus size can drop nothing)
     deduped = exact_dedup(docs).persist()
     assert deduped.filter(F.col("doc_id") < boiler_n).count() == 1
     pairs1 = {
         (r.id_a, r.id_b)
         for r in minhash_dedup_pairs(
-            deduped, threshold=0.8, max_bucket_size=None
+            deduped, threshold=0.8, max_bucket_size=n_docs
         ).collect()
         if r.id_a >= boiler_n
     }

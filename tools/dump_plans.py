@@ -24,6 +24,9 @@ PLAN_QUERIES = [
     "ann_ivf_topk",            # centroid lists
     "minhash_near_dups",       # band buckets + bucket caps + verify join
     "simhash_near_dups",       # chunk-blocked buckets
+    "incremental_near_dups",   # new + store buckets, store-scan pruning
+    "image_near_dups",         # 64-bit chunk-blocked buckets
+    "near_dup_clusters",       # MinHash + SimHash pairs into connected components
     "orders_by_region",        # broadcast join chain
     "lineitem_pricing_summary",  # partial+final hash agg
 ]
