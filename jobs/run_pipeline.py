@@ -142,6 +142,7 @@ def _dedup_stage(spark, output: str, run_id: str, threshold: float,
         minhash_dedup_pairs,
     )
     from language_detection_spark.plans.caching import release_tracked_caches
+    from language_detection_spark.plans.repartition import literal_frame
 
     t0 = _time.time()
     kept = (
@@ -191,8 +192,8 @@ def _dedup_stage(spark, output: str, run_id: str, threshold: float,
     pairs.unpersist()
     release_tracked_caches()
     wall = _time.time() - t0
-    audit = spark.createDataFrame(
-        [(run_id, n_kept, n_exact, n_pairs, n_final)],
+    audit = literal_frame(
+        spark, [(run_id, n_kept, n_exact, n_pairs, n_final)],
         "run_id string, rows_kept long, after_exact long, near_dup_pairs long,"
         " rows_final long",
     ).withColumn("committed_at", F.current_timestamp())

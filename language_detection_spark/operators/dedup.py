@@ -18,9 +18,9 @@ Language Models Better") expressed Spark-first:
   fingerprint (Arrow-batched numpy UDF over md5_int token hashes), then
   pigeonhole chunk blocking and an exact Hamming check.
 * jaccard_for_pairs — exact word-n-gram Jaccard for candidate pairs.
-* connected_components / near_dup_clusters — alternating large-star/
-  small-star (Kiveris et al. 2014) turning the pair graph into canonical
-  duplicate clusters; O(log² n) rounds regardless of diameter.
+* connected_components / near_dup_clusters — pair graph → canonical
+  duplicate clusters: union-find in one task, or alternating large-star/
+  small-star (Kiveris et al. 2014) at scale; runs jobs while built.
 * build_sig_store / incremental_near_dups — persisted band-partitioned
   signature store for continuous-crawl dedup: only the new batch is ever
   shingled; pairs verify by signature-estimated Jaccard.
@@ -31,11 +31,11 @@ policy, :func:`_capped_buckets`; ``max_bucket_size`` must be a positive
 int there and in every wrapper (``None`` raises ValueError).
 
 All operators key documents by an id column.  What reaches the driver is
-small and bounded: counts (connected_components' engine choice,
-exact_substring_dedup's join choice), one 3-value checksum row per CC
-round, and — while an ``incremental_near_dups`` plan with
-``store_buckets`` is built — the batch's bucket ids (<= store_buckets
-values) and at most 1025 band hashes.
+small and bounded: the edge count behind connected_components' engine
+choice, one 3-value checksum row per CC round, and — while an
+``incremental_near_dups`` plan with ``store_buckets`` is built — the
+batch's bucket ids (<= store_buckets values) and at most 1025 band
+hashes.
 """
 
 from __future__ import annotations
@@ -52,6 +52,7 @@ from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
 
 from ..plans.caching import persist_tracked
+from ..plans.repartition import one_task_or_distributed
 
 # --- shared hashing (cross-engine reproducible) ----------------------------
 
@@ -391,8 +392,8 @@ def lsh_candidate_pairs(
     )
 
 
-# Above this many input partitions jaccard_for_pairs builds shingle sets
-# only for candidate documents (see there).
+# From an input this many file splits large, jaccard_for_pairs builds
+# shingle sets only for candidate documents (see there).
 _SEMI_FILTER_MIN_PARTITIONS = 256
 
 
@@ -405,9 +406,9 @@ def jaccard_for_pairs(
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs (verification join).
 
-    The set build takes one of two scale shapes, chosen by the width of
-    the input scan (>= ``_SEMI_FILTER_MIN_PARTITIONS`` partitions
-    indicates a large corpus):
+    The set build takes one of two scale shapes, chosen by the plan's size
+    estimate of ``df`` (no job): ``_SEMI_FILTER_MIN_PARTITIONS`` file splits
+    or more, or no estimate (a local-list frame), is a large corpus:
 
     * wide — shingle sets are built ONLY for documents appearing in a
       candidate pair (broadcast left-semi on the pair ids, then the small
@@ -419,7 +420,9 @@ def jaccard_for_pairs(
       ~+40% on a 5k-doc table, where the shingle savings are nil).
     * narrow — sets derive straight from ``df`` (the build fuses into the
       two verify joins; no extra stages).  Right below ~10^6 docs."""
-    if df.rdd.getNumPartitions() >= _SEMI_FILTER_MIN_PARTITIONS:
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    if size >= _SEMI_FILTER_MIN_PARTITIONS * conf.filesMaxPartitionBytes():
         ids = (
             pairs.select(F.col("id_a").alias("id"))
             .unionByName(pairs.select(F.col("id_b").alias("id")))
@@ -664,11 +667,12 @@ def _edge_checksum(e: DataFrame) -> tuple:
     return (row["n"], row["h1"], row["h2"])
 
 
-def _cc_local_task(e: DataFrame) -> DataFrame:
+def _cc_local_task(e: DataFrame, stats: dict) -> DataFrame:
     """Union-find over a bounded edge list inside ONE executor task
     (mapInPandas on the coalesced frame): (node, component-min) for every
     node in the edge set — identical output contract to the star loop.
     One Spark job instead of ~6 shuffle stages per star round."""
+    stats.update(engine="local-union-find", rounds=0, converged=True)
 
     def _uf(batches):
         parent: dict[int, int] = {}
@@ -710,22 +714,25 @@ def _cc_local_task(e: DataFrame) -> DataFrame:
     return e.coalesce(1).mapInPandas(_uf, "node long, component long")
 
 
+_LOCAL_EDGES_MAX = 5_000_000  # CC's one-task bound: ~100s of MB of edges
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
     stats: dict | None = None,
-    local_edges_max: int = 5_000_000,
 ) -> DataFrame:
-    """Distributed connected components over an undirected edge list via
-    alternating large-star / small-star (Kiveris et al. 2014, "Connected
-    Components in MapReduce and Beyond").  Returns (node, component) for
-    every node that appears in ``edges``, where component = the minimum
-    node id of its component.
+    """(node, component = min node id of its component) for every node of
+    an undirected edge list.  Iterative, so it runs jobs while built
+    (``one_task_or_distributed``): union-find in one task up to
+    ``_LOCAL_EDGES_MAX`` edges, else alternating large-star / small-star
+    (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond").
+    ``stats`` receives engine, rounds and converged.
 
-    Scale shape (the reason for this algorithm over naive label
-    propagation): converges in O(log^2 n) rounds REGARDLESS of graph
+    Scale shape of the star loop (the reason for this algorithm over naive
+    label propagation): converges in O(log^2 n) rounds REGARDLESS of graph
     diameter — a boilerplate chain of 10^6 near-identical pages costs the
     same rounds as a clique.  Each round is one groupBy + one broadcast-free
     equi-join on the edge set; the per-node reduction is min(), which
@@ -739,32 +746,32 @@ def connected_components(
     the standard final stage of a web-scale dedup pipeline (cluster the
     near-dup pair graph, keep one representative per cluster).
     """
+    stats = {} if stats is None else stats
     e = (
         edges.select(
             F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        # materialize the input ONCE: each star round references e twice
-        # (self-union / self-join), which would otherwise re-execute the
-        # caller's whole pair-generation DAG per reference in round 1
-        .localCheckpoint(eager=True)
     )
-    # Scale-adaptive engine pick (the count reads the checkpoint blocks,
-    # not the caller's DAG): below ``local_edges_max`` edges the whole
-    # clustering runs as union-find in ONE executor task — a few hundred
-    # MB of edges at the 16-byte row, far under task memory — replacing
-    # ~6 shuffle stages per star round (5 rounds on the sf0.1 dup graph)
-    # with one job.  Past the threshold the alternating-star loop below
-    # is the path that scales to graphs no single task can hold.
-    if local_edges_max is not None and e.count() <= local_edges_max:
-        if stats is not None:
-            stats["rounds"] = 0
-            stats["converged"] = True
-            stats["engine"] = "local-union-find"
-        return _cc_local_task(e)
-    if stats is not None:
-        stats["engine"] = "alternating-stars"
+    out = one_task_or_distributed(
+        e, _LOCAL_EDGES_MAX, lambda e: _cc_local_task(e, stats),
+        lambda e: _cc_star_loop(e, max_iter, stats),
+    )
+    if not stats["converged"]:
+        # an unconverged edge set yields SPLIT clusters with no other signal
+        warnings.warn(
+            f"connected_components exited by iteration budget (max_iter="
+            f"{max_iter}) without reaching the checksum fixpoint; clusters "
+            f"may be split — raise max_iter",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    return out
+
+
+def _cc_star_loop(e: DataFrame, max_iter: int, stats: dict) -> DataFrame:
+    stats.update(engine="alternating-stars", rounds=0, converged=False)
 
     def large_star(e: DataFrame) -> DataFrame:
         # symmetrize; every node u connects its LARGER neighbors to the
@@ -799,32 +806,18 @@ def connected_components(
         )
 
     prev = None
-    converged = False
-    rounds = 0
     for _ in range(max_iter):
         # lazy localCheckpoint: the checksum aggregation below is the job
         # that materializes the round (one pass, not two); the checkpoint
         # cuts lineage so round N+1 plans from N's blocks, not from the
         # whole join history
         e = small_star(large_star(e)).localCheckpoint(eager=False)
-        rounds += 1
+        stats["rounds"] += 1
         cur = _edge_checksum(e)
         if cur == prev:
-            converged = True
+            stats["converged"] = True
             break
         prev = cur
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = converged
-    if not converged:
-        # an unconverged edge set yields SPLIT clusters with no other signal
-        warnings.warn(
-            f"connected_components exited by iteration budget (max_iter="
-            f"{max_iter}) without reaching the checksum fixpoint; clusters "
-            f"may be split — raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
     # at the fixpoint the edge set is a star forest: (node → component-min)
     # for every non-root node; roots appear only on the v side
     roots = e.select(F.col("v").alias("u"), F.col("v").alias("v")).distinct()
@@ -1523,12 +1516,9 @@ def exact_substring_dedup(
         .select("_h")
     )
     # the colliding-hash set is usually small (dup windows are a thin
-    # fraction of a crawl); broadcast it so the occurrence stream is
-    # filtered map-side with no shuffle.  Past the broadcast budget,
-    # fall back to a shuffle semi-join on the 8-byte hash — strings then
-    # cross the wire once instead of twice.
-    if multi_h.limit(10_000_001).count() <= 10_000_000:
-        multi_h = F.broadcast(multi_h)
+    # fraction of a crawl): AQE then broadcasts it and the occurrence
+    # stream is filtered map-side; past the broadcast budget the semi-join
+    # shuffles the 8-byte hash — strings cross the wire once, not twice
     occ_multi = occ_h.join(multi_h, "_h", "left_semi").drop("_h")
     stats = occ_multi.groupBy("win").agg(
         F.count(F.lit(1)).alias("cnt"),

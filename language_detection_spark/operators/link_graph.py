@@ -24,12 +24,11 @@ by n_nodes pico-units per iteration.)
 
 Scale shape (100 TB): extraction is regexp_extract_all + explode
 (single pass, codegen); the domain graph is a partial-agg groupBy
-(domains are Zipf-skewed, but counts combine map-side).  Each PageRank
-iteration is one shuffle join (ranks × edges keyed by src) + one
-partial-agg groupBy (dst) + a 1-row dangling aggregate broadcast back
-— the classic Pregel schedule expressed as DataFrames, with
-localCheckpoint truncating the 8-iteration lineage (the repo's
-iterative-loop discipline, same as connected_components).
+(domains are Zipf-skewed, but counts combine map-side).  PageRank runs in
+one task on graphs that fit one; past that each iteration is one shuffle
+join (ranks × edges keyed by src) + one partial-agg groupBy (dst) + a
+1-row dangling aggregate broadcast back — the Pregel schedule as
+DataFrames, localCheckpoint cutting the lineage every iteration.
 """
 
 from __future__ import annotations
@@ -38,6 +37,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.repartition import one_task_or_distributed
 from .url_filter import registered_domain, url_host
 
 #: Total PageRank mass in pico-units (10^12), so per-node ranks keep
@@ -120,6 +120,8 @@ def _pagerank_local_task(e: DataFrame, n_iter: int) -> DataFrame:
             srcs.extend(pdf["src"])
             dsts.extend(pdf["dst"])
         names = sorted(set(srcs) | set(dsts))
+        if not names:  # empty graph: no nodes, no ranks
+            return
         ix = {d: i for i, d in enumerate(names)}
         n = len(names)
         si = np.fromiter((ix[s] for s in srcs), dtype=np.int64,
@@ -144,10 +146,10 @@ def _pagerank_local_task(e: DataFrame, n_iter: int) -> DataFrame:
     return e.coalesce(1).mapInPandas(_pr, "domain string, rank_pico bigint")
 
 
-def pagerank_domains(
-    edges: DataFrame, n_iter: int = PR_ITERATIONS,
-    local_edges_max: int = 5_000_000,
-) -> DataFrame:
+_LOCAL_EDGES_MAX = 5_000_000  # pagerank_domains' one-task bound
+
+
+def pagerank_domains(edges: DataFrame, n_iter: int = PR_ITERATIONS) -> DataFrame:
     """Integer-exact PageRank over distinct (src_domain, dst_domain)
     edges → (domain, rank_pico BIGINT).
 
@@ -156,26 +158,22 @@ def pagerank_domains(
         r'(v) = floor(3 * floor(PR_SCALE / n) / 20)
               + floor(17 * (sum_{u->v} floor(r(u) / outdeg(u)) + D) / 20)
 
-    Engine choice is scale-adaptive (the same pattern as
-    ``connected_components``): up to ``local_edges_max`` distinct edges
-    the whole recurrence runs inside one executor task; past that, the
-    per-iteration shuffle-join loop below scales to graphs no single
-    task can hold.  Both engines are integer-exact, so outputs are
-    bit-identical.
+    Iterative, so it runs jobs while built (``one_task_or_distributed``):
+    one task up to ``_LOCAL_EDGES_MAX`` edges, else a shuffle-join loop;
+    both integer-exact, so bit-identical.  An empty graph has no ranks.
     """
     e = edges.select(
         F.col(edges.columns[0]).alias("src"),
         F.col(edges.columns[1]).alias("dst"),
     ).distinct()
-    e = e.localCheckpoint(eager=True)
-    n_edges = e.count()
-    if n_edges == 0:
-        # empty graph: no nodes, no ranks (formerly ZeroDivisionError)
-        return edges.sparkSession.createDataFrame(
-            [], "domain string, rank_pico bigint"
-        )
-    if local_edges_max is not None and n_edges <= local_edges_max:
-        return _pagerank_local_task(e, n_iter)
+    return one_task_or_distributed(
+        e, _LOCAL_EDGES_MAX,
+        lambda e: _pagerank_local_task(e, n_iter),
+        lambda e: _pagerank_loop(e, n_iter),
+    )
+
+
+def _pagerank_loop(e: DataFrame, n_iter: int) -> DataFrame:
     nodes = (
         e.select(F.col("src").alias("domain"))
         .unionAll(e.select(F.col("dst").alias("domain")))

@@ -291,7 +291,8 @@ def ivf_centroids(
 ) -> np.ndarray:
     """Train the coarse quantizer from a DETERMINISTIC sample (first
     ``sample_n`` rows by id) — collect is bounded by the sample, never the
-    table; at 100 TB the sample is still one broadcast-sized matrix."""
+    table; at 100 TB the sample is still one broadcast-sized matrix.
+    Iterative, so it runs a job (the collect) before its k-means fit."""
     rows = (
         embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
         .orderBy("id")

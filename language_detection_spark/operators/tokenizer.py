@@ -8,15 +8,12 @@ frequencies corpus-wide; BPE training is the same shape one level up —
 iterative frequency aggregation with a tiny argmax collected per round.
 
 Scale design (100 TB): the corpus-scale work is exactly ONE pass — the
-word-frequency aggregation (map-side combine, Zipf makes the distinct-
-word table orders of magnitude smaller than the corpus).  Every merge
-iteration then touches only that vocab table: adjacent-pair explode →
-partial-agg count → 1-row argmax to the driver; the merge itself is a
-pure JVM ``aggregate`` fold over each word's symbol array (greedy
-left-to-right, the standard BPE application order).  The vocab table is
-``localCheckpoint``-ed each round so 30 iterations never stack 30
-expression trees.  Nothing data-scale ever reaches the driver — only the
-single best (left, right, count) row per merge.
+word-frequency aggregation (map-side combine; Zipf makes the distinct-word
+table orders of magnitude smaller than the corpus).  The merge loop then
+touches only that table: in one task when it fits, else per round an
+adjacent-pair explode → partial-agg count → 1-row argmax to the driver and
+a pure JVM ``aggregate`` merge fold (greedy left-to-right), the table
+``localCheckpoint``-ed each round.  Nothing data-scale reaches the driver.
 """
 
 from __future__ import annotations
@@ -25,7 +22,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.repartition import literal_frame, one_task_or_distributed
+
 _EOW = "</w>"
+_MERGES_SCHEMA = (
+    "merge_rank int, left_sym string, right_sym string, pair_count bigint"
+)
 
 
 def word_freq_table(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -138,11 +140,13 @@ def _train_bpe_from_vocab(
     return merges
 
 
+_LOCAL_VOCAB_MAX = 2_000_000  # distinct words; Zipf keeps most corpora here
+
+
 def train_bpe_merges(
     df: DataFrame,
     n_merges: int = 24,
     text_col: str = "text",
-    local_vocab_max: int = 2_000_000,
 ) -> list[tuple[int, str, str, int]]:
     """Learn up to ``n_merges`` BPE merges; returns
     ``[(merge_rank, left_sym, right_sym, pair_count), ...]``.
@@ -152,31 +156,20 @@ def train_bpe_merges(
     implementation reproduces the exact merge sequence.  Stops early when
     no adjacent pair remains (every word fully merged).
 
-    Engine choice is scale-adaptive: the corpus-scale work is always the
-    ONE word-frequency pass; when the distinct-word table is small enough
-    to fit one executor task (``local_vocab_max`` rows — Zipf puts even
-    large corpora here), the whole merge loop runs inside a single
-    ``mapInPandas`` task with incremental pair statistics: one Spark job
-    total instead of one job PER MERGE, which removes the n_merges
-    sequential job launches that dominate wall time (a real 32k-merge
-    tokenizer is 32k scheduler round-trips otherwise).  Beyond the
-    threshold the per-round distributed loop below is the fallback —
-    vocab-bounded shuffles, 1-row argmax collect per round."""
-    wf = word_freq_table(df, text_col).localCheckpoint(eager=True)
-    if wf.count() <= local_vocab_max:
-        rows = (
-            wf.coalesce(1)
-            .mapInPandas(
-                _bpe_local_task(n_merges),
-                "merge_rank int, left_sym string, right_sym string, "
-                "pair_count bigint",
-            )
-            .collect()  # bounded: <= n_merges rows
-        )
-        return [
-            (int(r.merge_rank), r.left_sym, r.right_sym, int(r.pair_count))
-            for r in rows
-        ]
+    Iterative, so it runs jobs.  The corpus-scale work is the ONE
+    word-frequency pass; the merge loop then runs on the distinct-word
+    table (``one_task_or_distributed``): in one task with incremental pair
+    statistics up to ``_LOCAL_VOCAB_MAX`` words — one job, not one per
+    merge (32k for a real tokenizer) — else as rounds of vocab-bounded
+    shuffles with a 1-row argmax collect each."""
+    return one_task_or_distributed(
+        word_freq_table(df, text_col), _LOCAL_VOCAB_MAX,
+        lambda wf: _train_bpe_one_task(wf, n_merges),
+        lambda wf: _train_bpe_rounds(wf, n_merges),
+    )
+
+
+def _train_bpe_rounds(wf: DataFrame, n_merges: int):
     vocab = wf.select(_initial_symbols(F.col("word")).alias("syms"), "n")
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
@@ -212,10 +205,10 @@ def train_bpe_merges(
     return merges
 
 
-def _bpe_local_task(n_merges: int):
-    """mapInPandas body for the single-task merge loop: accumulate the
-    (word, n) vocabulary batches of the one coalesced partition, train,
-    emit the merge table (<= n_merges rows)."""
+def _train_bpe_one_task(wf: DataFrame, n_merges: int):
+    """The single-task merge loop: accumulate the (word, n) vocabulary
+    batches of the one coalesced partition, train, collect the merge
+    table (<= n_merges rows)."""
 
     def _train(batches):
         words: list[str] = []
@@ -241,14 +234,12 @@ def _bpe_local_task(n_merges: int):
             }
         )
 
-    return _train
+    return [tuple(r) for r in
+            wf.coalesce(1).mapInPandas(_train, _MERGES_SCHEMA).collect()]
 
 
 def bpe_merges_df(spark, merges) -> DataFrame:
-    return spark.createDataFrame(
-        merges,
-        "merge_rank: int, left_sym: string, right_sym: string, pair_count: bigint",
-    )
+    return literal_frame(spark, merges, _MERGES_SCHEMA)
 
 
 def encode_vocab_bpe(vocab: DataFrame, merges) -> DataFrame:

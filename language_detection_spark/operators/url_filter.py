@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.repartition import literal_frame
+
 #: Presence-based keyword weights in milli-units, RefinedWeb's
 #: severity tiers: hard words (1000 = instant fail at the default
 #: threshold) and soft words (500/330 — need two/three co-occurring).
@@ -313,8 +315,8 @@ def synth_crawl_urls(
 
 def synth_blocklist(spark: SparkSession) -> DataFrame:
     """The fixture blocklist matching two of the synth hosts."""
-    return spark.createDataFrame(
-        [("spam-mill.com",), ("spam-mill.org",), ("spam-mill.net",),
-         ("clickfarm.com",), ("clickfarm.org",), ("clickfarm.net",)],
+    return literal_frame(
+        spark, [("spam-mill.com",), ("spam-mill.org",), ("spam-mill.net",),
+                ("clickfarm.com",), ("clickfarm.org",), ("clickfarm.net",)],
         "domain string",
     )

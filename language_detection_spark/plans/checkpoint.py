@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .audit import audit_aggregation
-from .repartition import bucket_col
+from .repartition import bucket_col, literal_frame
 
 
 def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
@@ -38,11 +38,7 @@ def _chunk_audit(written: DataFrame, run_id: str, chunk: list[int]) -> DataFrame
     """One audit row per bucket of ``chunk``, also for a bucket that got no
     rows: it has no written data to aggregate, yet it must commit, or
     every re-run would write it again.  Its counts and sums are 0."""
-    # a literal array, not createDataFrame(list): scanning a local list
-    # runs Python workers of its own, next to the annotate UDF's
-    ids = written.sparkSession.range(1).select(
-        F.explode(F.array(*[F.lit(b) for b in chunk])).alias("bucket")
-    )
+    ids = literal_frame(written.sparkSession, [(b,) for b in chunk], "bucket int")
     return (
         ids.join(audit_aggregation(written, run_id), "bucket", "left")
         .fillna(0)  # numeric columns only: the warc_ts bounds stay null

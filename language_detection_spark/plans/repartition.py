@@ -1,4 +1,5 @@
-"""Explicit partitioning for the heavy UDF stage (Q6 in SURVEY.md §2.7).
+"""Explicit partitioning for the heavy UDF stage (Q6 in SURVEY.md §2.7),
+and the other plan-shape choices below.
 
 At 10^12-document scale the input arrives partitioned by crawl file, i.e.
 by host — a handful of giant hosts would pin a handful of tasks for hours.
@@ -45,3 +46,24 @@ def parallelize_scan(df: DataFrame, min_factor: int = 2) -> DataFrame:
     if df.rdd.getNumPartitions() * min_factor <= target:
         return df.repartition(target)
     return df
+
+
+def one_task_or_distributed(df: DataFrame, max_rows: int, local, distributed):
+    """The engine pick of the iterative operators (connected components,
+    PageRank, BPE training), which are actions: each distributed round is
+    shuffle stages plus a driver read.  ``df`` is materialized once (eager
+    localCheckpoint: the loops reference it several times per round) and
+    counted from its blocks; up to ``max_rows`` rows ``local(e)`` runs the
+    whole algorithm in ONE task (one job), else ``distributed(e)`` runs the
+    rounds that scale past what one task can hold."""
+    e = df.localCheckpoint(eager=True)
+    return local(e) if e.count() <= max_rows else distributed(e)
+
+
+def literal_frame(spark, rows, schema: str) -> DataFrame:
+    """Driver-side ``rows`` (DDL ``schema``) as one literal array, where
+    ``createDataFrame(<list>)`` plans a Python RDD that starts workers."""
+    structs = [F.struct(*map(F.lit, row)) for row in rows]
+    return spark.range(1).select(
+        F.inline(F.array(*structs).cast(f"array<struct<{schema}>>"))
+    )

@@ -36,6 +36,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _REGISTRY: dict[str, dict] = {}
+_EMB_DIM = 64  # the data contract's embedding width, at every scale
 
 
 def _snapshot(name: str):
@@ -1313,7 +1314,7 @@ def q_near_dup_clusters(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-def _ann_lsh_oracle_sql(dim: int = 64, n_planes: int = 6, seed: int = 7) -> str:
+def _ann_lsh_oracle_sql(dim: int = _EMB_DIM, n_planes: int = 6, seed: int = 7) -> str:
     """The LSH ANN pipeline is SQL-reproducible once the hyperplanes are
     baked in as literals: DuckDB recomputes sign-bit buckets, Hamming-1
     probes, and the exact cosine re-rank — a REAL oracle for the
@@ -1362,14 +1363,13 @@ def q_ann_lsh(spark, sf_dir):
     from .operators.similarity import lsh_topk
 
     emb = _emb(spark, sf_dir)
-    dim = len(emb.select("embedding").first()[0])
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     # 6 planes → 64 buckets: sized so buckets hold enough candidates for a
     # meaningful top-k at these row counts (recall/cost knob); Hamming-1
     # multi-probe lifts recall without widening buckets
-    out = lsh_topk(emb, q, dim=dim, k=5, n_planes=6, probe_hamming=1)
+    out = lsh_topk(emb, q, dim=_EMB_DIM, k=5, n_planes=6, probe_hamming=1)
     return out.select(
         "query_id", "vec_id", F.round("sim", 6).alias("sim"), "rank"
     ).orderBy("query_id", "rank")
@@ -1953,7 +1953,7 @@ def q_source_capped_docs(spark, sf_dir):
 
 # embedding-cosine near-dup pairs: bucketed self-join + exact verify —
 # plane-baked oracle recomputes bucket assignment and cosine independently
-def _emb_near_dup_sql(dim: int = 64, n_planes: int = 4, seed: int = 11,
+def _emb_near_dup_sql(dim: int = _EMB_DIM, n_planes: int = 4, seed: int = 11,
                       threshold: float = 0.3) -> str:
     from .operators.similarity import _planes
 
@@ -1983,9 +1983,8 @@ def q_embedding_near_dups(spark, sf_dir):
     from .operators.similarity import embedding_near_dup_pairs
 
     emb = _emb(spark, sf_dir)
-    dim = len(emb.select("embedding").first()[0])
     out = embedding_near_dup_pairs(
-        emb, dim=dim, threshold=0.3, n_planes=4, seed=11
+        emb, dim=_EMB_DIM, threshold=0.3, n_planes=4, seed=11
     )
     return out.select(
         "id_a", "id_b", F.round("sim", 6).alias("sim")

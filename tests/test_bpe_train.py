@@ -9,6 +9,7 @@ multi-script text, and the greedy left-to-right application order.
 
 from pyspark.sql import functions as F
 
+from language_detection_spark.operators import tokenizer
 from language_detection_spark.operators.tokenizer import (
     train_bpe_local,
     train_bpe_merges,
@@ -69,16 +70,16 @@ def test_bpe_merge_application_is_order_deterministic(spark):
     assert a == b == train_bpe_local(texts, n_merges=8)
 
 
-def test_bpe_engines_agree_and_match_arbiter(spark):
+def test_bpe_engines_agree_and_match_arbiter(spark, monkeypatch):
     # the scale-adaptive fast path (single-task incremental merge loop)
     # and the distributed per-round loop must produce the identical merge
     # sequence, both equal to the independent plain-Python arbiter.
-    # local_vocab_max=0 forces the distributed engine.
+    # _LOCAL_VOCAB_MAX=0 forces the distributed engine.
     texts = [
         "aaa aaab baaa", "ab ab ab abab", "don't stop won't",
         "低 低 低资 资低 资资", "repeat repeat repeat xyz",
     ]
     fast = train_bpe_merges(_df(spark, texts), n_merges=16)
-    dist = train_bpe_merges(_df(spark, texts), n_merges=16,
-                            local_vocab_max=0)
+    monkeypatch.setattr(tokenizer, "_LOCAL_VOCAB_MAX", 0)
+    dist = train_bpe_merges(_df(spark, texts), n_merges=16)
     assert fast == dist == train_bpe_local(texts, n_merges=16)

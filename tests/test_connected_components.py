@@ -10,10 +10,17 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from language_detection_spark.operators import dedup
 from language_detection_spark.operators.dedup import (
     connected_components,
     near_dup_clusters,
 )
+
+
+@pytest.fixture()
+def stars_only(monkeypatch):
+    """Force the alternating-star loop: no edge set fits one task."""
+    monkeypatch.setattr(dedup, "_LOCAL_EDGES_MAX", 0)
 
 
 def _union_find(nodes, edges):
@@ -35,34 +42,35 @@ def _union_find(nodes, edges):
     return {n: min(members) for members in comp.values() for n in members}
 
 
-def _check(spark, edges):
+def _check(spark, edges, monkeypatch):
     nodes = sorted({x for e in edges for x in e})
     expected = _union_find(nodes, edges)
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "id_a long, id_b long"
     )
     # both engines: the single-task union-find fast path (default at this
-    # scale) and the alternating-star loop (forced via local_edges_max=0)
+    # scale) and the alternating-star loop (forced via _LOCAL_EDGES_MAX=0)
     got_local = {
         r["node"]: r["component"]
         for r in connected_components(df).collect()
     }
+    monkeypatch.setattr(dedup, "_LOCAL_EDGES_MAX", 0)
     got_stars = {
         r["node"]: r["component"]
-        for r in connected_components(df, local_edges_max=0).collect()
+        for r in connected_components(df).collect()
     }
     assert got_local == expected
     assert got_stars == expected
 
 
-def test_cc_chain(spark):
+def test_cc_chain(spark, monkeypatch):
     # a 64-node chain with ids reversed — diameter 63, worst case for
     # min-label propagation; stars must still converge fast
     edges = [(i + 1, i) for i in range(63)]
-    _check(spark, edges)
+    _check(spark, edges, monkeypatch)
 
 
-def test_cc_stats_and_round_bound(spark):
+def test_cc_stats_and_round_bound(spark, stars_only):
     """Iteration-count capture: a 256-node chain (diameter 255) must
     converge — and in O(log^2 n) rounds, the point of alternating stars
     over label propagation (which would need ~n rounds here)."""
@@ -73,27 +81,25 @@ def test_cc_stats_and_round_bound(spark):
     stats = {}
     got = {r["node"]: r["component"]
            for r in connected_components(
-               df, stats=stats, local_edges_max=0).collect()}
+               df, stats=stats).collect()}
     assert all(c == 0 for c in got.values()) and len(got) == 256
     assert stats["converged"] is True
     assert stats["engine"] == "alternating-stars"
     assert 1 <= stats["rounds"] <= math.ceil(math.log2(256) ** 2)
 
 
-def test_cc_unconverged_warns(spark):
+def test_cc_unconverged_warns(spark, stars_only):
     """Exiting on the iteration budget (not the checksum fixpoint) must
     warn — silent split clusters are the failure mode."""
     edges = [(i + 1, i) for i in range(63)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     stats = {}
     with pytest.warns(RuntimeWarning, match="iteration budget"):
-        connected_components(
-            df, max_iter=1, stats=stats, local_edges_max=0
-        ).collect()
+        connected_components(df, max_iter=1, stats=stats).collect()
     assert stats["converged"] is False and stats["rounds"] == 1
 
 
-def test_cc_mixed_shapes(spark):
+def test_cc_mixed_shapes(spark, monkeypatch):
     edges = (
         # clique 100..104
         [(a, b) for a in range(100, 105) for b in range(100, 105) if a < b]
@@ -104,20 +110,20 @@ def test_cc_mixed_shapes(spark):
         # chain bridging the clique to the star
         + [(104, 150), (150, 151), (151, 200)]
     )
-    _check(spark, edges)
+    _check(spark, edges, monkeypatch)
 
 
-def test_cc_random_graphs(spark):
+def test_cc_random_graphs(spark, monkeypatch):
     rng = random.Random(7)
     nodes = list(range(0, 400, 3))
     edges = {(rng.choice(nodes), rng.choice(nodes)) for _ in range(300)}
     edges = [(a, b) for a, b in edges if a != b]
-    _check(spark, edges)
+    _check(spark, edges, monkeypatch)
 
 
-def test_cc_duplicate_and_reversed_edges(spark):
+def test_cc_duplicate_and_reversed_edges(spark, monkeypatch):
     edges = [(5, 9), (9, 5), (5, 9), (9, 12), (12, 5)]
-    _check(spark, edges)
+    _check(spark, edges, monkeypatch)
 
 
 @pytest.fixture()

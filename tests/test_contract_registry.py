@@ -104,22 +104,61 @@ def _nonatomic_fields(schema):
     ]
 
 
-def test_contract_queries_emit_atomic_columns_only(spark):
+# The registry builders that start Spark jobs while their DataFrame is
+# built, with the reason.  The first seven call an iterative operator,
+# which is an action by nature; the rest are open.  May only shrink.
+PLAN_TIME_JOBS = {
+    "near_dup_clusters": "connected_components",
+    "cluster_representatives": "connected_components",
+    "domain_pagerank": "pagerank_domains",
+    "bpe_merges": "train_bpe_merges",
+    "bpe_token_stats": "train_bpe_merges",
+    "ann_ivf_topk": "ivf_centroids (k-means sample)",
+    "semantic_dedup": "ivf_centroids (k-means sample)",
+    "perplexity_terciles": "open: its eager count keeps the annotate UDF "
+    "from running twice, and no job-free form is settled",
+}
+
+
+def _schema_read(tracker, job_id) -> bool:
+    """A scan's parquet footer read, which every builder may start."""
+    stages = tracker.getJobInfo(job_id).stageIds
+    return all(
+        tracker.getStageInfo(s).name.startswith("parquet at ") for s in stages
+    )
+
+
+def test_contract_queries_emit_atomic_columns_only(spark, sf_dir):
     """The external driver canonicalizes results with pandas
     sort/factorize, which crashes on list-typed cells (unhashable type)
     — CORRECTNESS_r05 recorded exactly that for the old array<double>
     frame_means column.  Structural guard: EVERY registered contract
     query's declared output schema is atomic-typed.  Schemas come from
-    plan construction only (no job runs)."""
+    plan construction only: each query is built under its own job group,
+    and only the builders in PLAN_TIME_JOBS start a job there that is
+    not a schema read."""
     import __spark_entry__ as e
 
-    offenders = {}
-    for name, fn in e.queries().items():
-        df = fn(spark, "/root/testdata/sf0.001")
-        bad = _nonatomic_fields(df.schema)
-        if bad:
-            offenders[name] = bad
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    offenders, with_jobs = {}, set()
+    try:
+        for name, fn in e.queries().items():
+            sc.setJobGroup(f"build-{name}", name)
+            df = fn(spark, sf_dir)
+            bad = _nonatomic_fields(df.schema)
+            if bad:
+                offenders[name] = bad
+            if not all(_schema_read(tracker, j)
+                       for j in tracker.getJobIdsForGroup(f"build-{name}")):
+                with_jobs.add(name)
+    finally:
+        sc._jsc.clearJobGroup()
     assert offenders == {}, f"non-atomic contract outputs: {offenders}"
+    assert with_jobs == set(PLAN_TIME_JOBS), (
+        f"start jobs while built, unlisted: {sorted(with_jobs - set(PLAN_TIME_JOBS))};"
+        f" listed but job-free: {sorted(set(PLAN_TIME_JOBS) - with_jobs)}"
+    )
 
 
 def test_atomic_lint_catches_array_output(spark):

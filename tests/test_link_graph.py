@@ -3,6 +3,7 @@ vs a plain-Python arbiter implementing the documented integer spec."""
 
 import pytest
 
+from language_detection_spark.operators import link_graph
 from language_detection_spark.operators.link_graph import (
     PR_DAMP_DEN,
     PR_DAMP_NUM,
@@ -121,9 +122,9 @@ def test_synth_fixture_has_dangling_hubs(spark):
     assert "decoy-7.com" not in stats
 
 
-def test_pagerank_engines_agree(spark):
+def test_pagerank_engines_agree(spark, monkeypatch):
     """The single-task fast path (default at this scale) and the
-    per-iteration shuffle-join loop (forced via local_edges_max=0) are
+    per-iteration shuffle-join loop (forced via _LOCAL_EDGES_MAX=0) are
     both integer-exact and must agree bit-for-bit with the arbiter."""
     edges = [
         ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
@@ -132,12 +133,16 @@ def test_pagerank_engines_agree(spark):
     df = spark.createDataFrame(edges, "src string, dst string")
     fast = {r["domain"]: r["rank_pico"]
             for r in pagerank_domains(df).collect()}
+    monkeypatch.setattr(link_graph, "_LOCAL_EDGES_MAX", 0)
     dist = {r["domain"]: r["rank_pico"]
-            for r in pagerank_domains(df, local_edges_max=0).collect()}
+            for r in pagerank_domains(df).collect()}
     assert fast == dist == local_pagerank(edges)
 
 
-def test_pagerank_empty_graph_returns_empty(spark):
+def test_pagerank_empty_graph_returns_empty(spark, monkeypatch):
+    # an empty graph takes the single-task path at any threshold, and
+    # that path must emit no ranks (n = 0 nodes divides nothing)
     df = spark.createDataFrame([], "src string, dst string")
     assert pagerank_domains(df).count() == 0
-    assert pagerank_domains(df, local_edges_max=0).count() == 0
+    monkeypatch.setattr(link_graph, "_LOCAL_EDGES_MAX", 0)
+    assert pagerank_domains(df).count() == 0

@@ -540,7 +540,9 @@ def test_resize_media_stage(spark):
 def test_minhash_semi_filter_path_identical(spark, dup_docs, monkeypatch):
     """The scale-shape verification (broadcast semi-filter on candidate
     ids + persisted set frame) returns exactly the same verified pairs as
-    the fused small-scale path; the partition threshold picks the path."""
+    the fused small-scale path; the size threshold picks the path (a
+    local-list frame has no size estimate, so only an infinite threshold
+    keeps it narrow)."""
     from language_detection_spark.operators import dedup
 
     def _pairs(min_partitions):
@@ -551,7 +553,7 @@ def test_minhash_semi_filter_path_identical(spark, dup_docs, monkeypatch):
         return plan, {(r.id_a, r.id_b, round(r.jaccard, 9))
                       for r in out.collect()}
 
-    plain_plan, plain = _pairs(10**9)
+    plain_plan, plain = _pairs(float("inf"))
     semi_plan, semi = _pairs(1)
     assert "LeftSemi" not in plain_plan and "LeftSemi" in semi_plan
     assert plain == semi and plain

@@ -20,6 +20,55 @@ def test_parallelize_scan_widens_narrow_and_skips_wide(spark, tmp_path):
     assert parallelize_scan(wide) is wide
 
 
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_small_driver_frames_plan_no_python_rdd(spark, tmp_path, monkeypatch):
+    """The library's small driver-side frames (BPE merge table, fixture
+    blocklist, the dedup stage's audit row) are literal arrays: a
+    ``createDataFrame(<python list>)`` frame plans a LogicalRDD, whose
+    scan starts Python workers of its own."""
+    import sys
+    from pathlib import Path
+
+    from pyspark.sql import DataFrameWriter
+
+    from language_detection_spark.operators.tokenizer import bpe_merges_df
+    from language_detection_spark.operators.url_filter import synth_blocklist
+
+    assert "LogicalRDD" in _analyzed(spark.createDataFrame([(1,)], "a int"))
+    merges = [(1, "a", "b", 5), (2, "ab", "</w>", 3)]
+    for df in (bpe_merges_df(spark, merges), bpe_merges_df(spark, []),
+               synth_blocklist(spark)):
+        assert "LogicalRDD" not in _analyzed(df)
+    assert [tuple(r) for r in bpe_merges_df(spark, merges).collect()] == merges
+    assert bpe_merges_df(spark, []).count() == 0
+    assert synth_blocklist(spark).count() == 6
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
+    import run_pipeline
+
+    out = str(tmp_path / "job")
+    spark.createDataFrame(
+        [("u1", 0, "a b c d e", True), ("u2", 1, "f g h i j", True)],
+        "url string, bucket int, scrubbed_text string, keep boolean",
+    ).write.parquet(f"{out}/data")
+    plans = {}
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans[path] = _analyzed(self._df)
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    res = run_pipeline._dedup_stage(spark, out, "r1", threshold=0.8)
+    assert "LogicalRDD" not in plans[f"{out}/dedup/audit"]
+    audit = spark.read.parquet(f"{out}/dedup/audit").first()
+    assert (audit.run_id, audit.rows_kept, audit.rows_final) == (
+        "r1", 2, res["rows_final"])
+
+
 def test_aqe_splits_skewed_join(spark):
     """The session config (AQE + skew join) actually splits a pathological
     key at runtime: one key holds ~all left rows; after execution the
