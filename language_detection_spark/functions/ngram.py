@@ -6,14 +6,16 @@ space and ALL-CAPS-run suppression) driven per char by
 `Detector._extractNGrams` (Detector.java:364-379) and
 `LangProfile.update` (LangProfile.java:172-189).
 
-Two implementations with identical semantics:
+Two entry points with identical semantics:
 
 * ``NGramScanner`` — the faithful per-char scanner (golden-test surface and
   seeded-parity path).
-* ``extract_gram_keys`` — a **fully vectorized** numpy re-derivation used in
-  the hot path.  The scanner's behavior reduces to closed-form per-position
-  rules over the space-padded normalized UTF-16 unit array S (pad models the
-  initial " " buffer, NGram.java:28):
+* ``extract_gram_keys_batch`` — the **fully vectorized** numpy
+  re-derivation used in the hot path, one pass over every document of a
+  batch (``extract_gram_keys`` is its one-document form).  The scanner's
+  behavior reduces to closed-form per-position rules over the
+  space-padded normalized UTF-16 unit array S (pad models the initial
+  " " buffer, NGram.java:28):
 
     - run length  r[i] = min(3, i - last_reset(i) + 1), where a *reset*
       is any i with S[i]==' ' and S[i-1]==' ' (the buffer collapses to " "
@@ -121,13 +123,14 @@ def extract_ngrams_scanner(text: str) -> list[str]:
 
 
 def extract_gram_keys_batch(texts: list[str]) -> list[np.ndarray]:
-    """Batched twin of :func:`extract_gram_keys`: one vectorized pass over
-    ALL documents' characters instead of ~20 numpy dispatches per document
-    (which dominate cost on short texts).
+    """Gram keys of every document (all gram *instances*; the multiset
+    matches the scanner's) in one vectorized pass over ALL documents'
+    characters instead of ~20 numpy dispatches per document (which
+    dominate cost on short texts).
 
-    Identical output per document — same keys, same order (1-grams in
-    position order, then 2-grams, then 3-grams) — so downstream draw
-    indexing stays bitwise-reproducible.  Construction: every document is
+    Per document the order is fixed — 1-grams in position order, then
+    2-grams, then 3-grams — because detector draws index positionally
+    into the key array.  Construction: every document is
     prefixed with one space (the scanner's initial " " buffer, exactly the
     per-doc pad); that separator position itself is masked out of emission,
     which reproduces per-doc behavior at both boundaries (the space still
@@ -207,49 +210,5 @@ def extract_gram_keys_batch(texts: list[str]) -> list[np.ndarray]:
 
 
 def extract_gram_keys(text: str) -> np.ndarray:
-    """Vectorized gram extraction → int64 key array (all gram *instances*,
-    grouped by n rather than by position; the multiset matches the scanner).
-    """
-    raw = str_to_utf16_units(text)
-    if raw.size == 0:
-        return np.empty(0, dtype=np.int64)
-    S = np.empty(raw.size + 1, dtype=np.uint32)
-    S[0] = SPACE
-    S[1:] = CHAR_FOLD[raw]  # all UTF-16 units are < 0x10000 by construction
-
-    is_sp = S == SPACE
-    u = IS_UPPER[S]
-    m = S.size
-    idx = np.arange(m, dtype=np.int64)
-
-    # jsp[i] = index of the last space at or before i-1 (pad guarantees one);
-    # r[i] = buffer length after processing S[i] (see module docstring)
-    last_sp = np.maximum.accumulate(np.where(is_sp, idx, 0))
-    jsp = np.empty(m, dtype=np.int64)
-    jsp[0] = 0
-    jsp[1:] = last_sp[:-1]
-    r = np.minimum(3, idx - jsp + 1)
-    both_sp = np.zeros(m, dtype=bool)
-    both_sp[1:] = is_sp[1:] & is_sp[:-1]
-    r[both_sp] = 1
-
-    ok = np.empty(m, dtype=bool)  # not capital-suppressed
-    ok[0] = False
-    ok[1:] = ~(u[1:] & u[:-1])
-
-    S64 = S.astype(np.int64)
-    out = []
-    m1 = ok & ~is_sp
-    m1[0] = False
-    out.append(S64[m1])
-    m2 = ok & (r >= 2)
-    m2[:1] = False
-    if m2.any():
-        i2 = idx[m2]
-        out.append(S64[i2 - 1] | (S64[i2] << _SHIFT))
-    m3 = ok & (r >= 3)
-    m3[:2] = False
-    if m3.any():
-        i3 = idx[m3]
-        out.append(S64[i3 - 2] | (S64[i3 - 1] << _SHIFT) | (S64[i3] << (2 * _SHIFT)))
-    return np.concatenate(out) if out else np.empty(0, dtype=np.int64)
+    """One document's gram keys (see :func:`extract_gram_keys_batch`)."""
+    return extract_gram_keys_batch([text])[0]

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from ..functions.ngram import extract_gram_keys, unpack_gram
+from ..functions.ngram import extract_gram_keys_batch, unpack_gram
 from ..functions.normalize import normalize_vi
 from .factory import DetectorModel
 from .profile import LangProfile
@@ -26,15 +26,15 @@ from .profile import LangProfile
 
 def gram_keys_udf():
     """text → array of packed gram keys (training path: normalize_vi then
-    scan, no scrub/cap — LangProfile.update semantics)."""
+    scan, no scrub/cap — LangProfile.update semantics), one extraction
+    pass per Arrow batch; a None text gets no keys."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def _grams(texts: pd.Series) -> pd.Series:
-        return texts.map(
-            lambda t: []
-            if t is None
-            else [int(k) for k in extract_gram_keys(normalize_vi(t))]
+        keys = extract_gram_keys_batch(
+            ["" if t is None else normalize_vi(t) for t in texts]
         )
+        return pd.Series([k.tolist() for k in keys], index=texts.index)
 
     return _grams
 

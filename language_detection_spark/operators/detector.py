@@ -15,13 +15,12 @@ detector, in two forms with the same semantics:
   and stop when max > 0.99999 (or at the 1000-iteration cap); average the
   per-trial posteriors.  Draws come from a per-document counter-based
   Philox stream (deterministic given the document's seed); the inner loop
-  is chunked cumprod over a (trials, chunk, langs) tensor — see
-  ``_detect_one`` for why linear space is numerically safe.
+  runs every (document, trial) pair of a sub-batch together — see
+  ``_detect_many_from_keys`` for the convergence cadence and why linear
+  space is numerically safe.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 
@@ -38,7 +37,6 @@ from ..config import (
 )
 from ..functions.javarandom import JavaRandom
 from ..functions.ngram import (
-    extract_gram_keys,
     extract_gram_keys_batch,
     extract_ngrams_scanner,
     pack_gram,
@@ -157,104 +155,17 @@ def sort_probability(langs, prob: np.ndarray) -> list[tuple[str, float]]:
 # ---------------------------------------------------------------------------
 
 
-def _detect_one(
-    model: DetectorModel,
-    prepared_text: str,
-    rng: np.random.Generator,
-    alpha: float,
-    n_trial: int,
-    prior: np.ndarray | None,
-) -> np.ndarray | None:
-    """All ``n_trial`` trials run in lockstep; draws are consumed in groups
-    of 5 (the renormalize-and-check cadence) so convergence is evaluated at
-    every group boundary, matching the reference's every-5-iterations check
-    (the vectorized path checks after 5,10,… updates; the faithful path
-    after 1,6,11,… — a scheduling detail with no semantic effect, and the
-    two paths agree on labels, see tests/test_parity_f1.py).
-    """
-    text = purge_latin_if_minor(prepared_text)
-    keys = extract_gram_keys(text)
-    return _detect_from_keys(model, keys, rng, alpha, n_trial, prior)
-
-
-def _detect_from_keys(
-    model: DetectorModel,
-    keys: np.ndarray,
-    rng: np.random.Generator,
-    alpha: float,
-    n_trial: int,
-    prior: np.ndarray | None,
-) -> np.ndarray | None:
-    if keys.size == 0:
-        return None
-    rows = model.lookup_rows(keys)
-    rows = rows[rows >= 0]
-    if rows.size == 0:
-        return None
-    ur, inv = np.unique(rows, return_inverse=True)
-    n_langs = model.probs.shape[1]
-    base = prior if prior is not None else np.full(n_langs, 1.0 / n_langs)
-    weights = (
-        (alpha + rng.standard_normal(n_trial) * ALPHA_WIDTH) / BASE_FREQ
-    ).astype(np.float32)
-    # single float32 gather table; the per-trial weight is added into the
-    # gathered chunk tensor in place.  Deliberately NO (T, u, L) per-trial
-    # table: that allocation (~300 KB/doc) crosses glibc's mmap threshold
-    # and the resulting per-document mmap/munmap churn serializes on kernel
-    # TLB shootdowns once tens of workers run in parallel.
-    Pu = model.probs[ur].astype(np.float32)  # (u, L)
-    m = rows.size
-    prob = np.tile(base, (n_trial, 1))  # (T, L) float64
-    done = np.zeros(n_trial, dtype=bool)
-    result = np.zeros((n_trial, n_langs))
-    g_done = 0
-    while True:
-        g = min(_CHUNK_GROUPS, _MAX_GROUPS - g_done)
-        # the draw TENSOR keeps its full (T, g, 5) shape even after trials
-        # converge — RNG consumption must not depend on convergence, or
-        # per-doc outputs would change; compute is then masked to the
-        # still-active trials (values for those are bit-identical to the
-        # unmasked form: same draws, same weights, same prob rows)
-        draws = inv[rng.integers(0, m, size=(n_trial, g, _GROUP))]
-        act = np.flatnonzero(~done)
-        pf = Pu[draws[act]]  # (A, g, 5, L) float32 gather
-        pf += weights[act, None, None, None]
-        gf = pf.prod(axis=2)   # (A, g, L) float32 — safe range, see above
-        cg = np.cumprod(gf, axis=1, dtype=np.float64)  # (A, g, L)
-        ck = prob[act, None, :] * cg
-        ck /= ck.sum(axis=2, keepdims=True)
-        maxp = ck.max(axis=2)  # (A, g)
-        at_cap = g_done + g >= _MAX_GROUPS
-        hits = maxp > CONV_THRESHOLD
-        if at_cap:
-            hits[:, -1] = True
-        # batched first-hit selection (argmax finds the first True)
-        first = hits.argmax(axis=1)                    # (A,)
-        has = hits[np.arange(act.size), first]
-        sel = np.flatnonzero(has)
-        if sel.size:
-            tsel = act[sel]
-            result[tsel] = ck[sel, first[sel]]
-            done[tsel] = True
-        rest = np.flatnonzero(~has)
-        if rest.size == 0:
-            break
-        prob[act[rest]] = ck[rest, -1, :]
-        g_done += g
-    return result.mean(axis=0)
-
-
 # sub-batch packing for the batched sampling call: enough docs to amortize
 # numpy dispatch, but capped by TOTAL gram keys so the concatenated gather
 # table stays cache-resident (long documents have thousands of unique
 # grams each — 128 of them would build a 100+ MB table and turn the
 # per-chunk gathers DRAM-bound).  Batch composition never affects values:
 # every document keeps its own RNG stream and per-pair reductions.
-_SUBBATCH = int(os.environ.get("LANGDETECT_SUBBATCH", "128"))
-_SUBBATCH_KEYS = int(os.environ.get("LANGDETECT_SUBBATCH_KEYS", "64000"))
+_SUBBATCH = 128
+_SUBBATCH_KEYS = 64000
 # chunks of draws fetched per integers() call on multi-chunk documents
 # (prefix property makes slices bitwise-equal to separate calls)
-_PREFETCH_CHUNKS = int(os.environ.get("LANGDETECT_PREFETCH_CHUNKS", "3"))
+_PREFETCH_CHUNKS = 3
 
 
 def _pack_subbatches(keys_list):
@@ -278,23 +189,32 @@ def _detect_many_from_keys(
     rngs: list,
     alpha: float,
     n_trial: int,
-    prior: np.ndarray | None,
 ) -> list[np.ndarray | None]:
-    """Batched twin of _detect_from_keys: the chunk loop's gather / prod /
-    cumprod / normalize run ONCE per chunk for every still-active
-    (document, trial) pair across the whole sub-batch, amortizing numpy
-    dispatch that dominates per-document cost on short texts.
+    """Averaged posterior per document (None when it has no known gram).
 
-    Bitwise-identical to the scalar path: each document draws from its OWN
-    generator in the same order and shapes (weights first, then full
-    (T, g, 5) integer tensors per chunk regardless of trial convergence),
-    and every floating-point reduction runs per (doc, trial) pair over the
-    same operands in the same order — batching only changes which python
-    call issues them."""
+    All ``n_trial`` trials of a document run in lockstep from a uniform
+    prior; draws are consumed in groups of 5 (the renormalize-and-check
+    cadence) so convergence is evaluated at every group boundary,
+    matching the reference's every-5-iterations check (this path checks
+    after 5,10,… updates; the faithful path after 1,6,11,… — a
+    scheduling detail with no semantic effect, and the two paths agree
+    on labels, see tests/test_parity_f1.py).  Products stay in linear
+    space: see ``_CHUNK_GROUPS`` for why neither the float32 group
+    products nor the float64 running product can underflow.
+
+    The chunk loop's gather / prod / product / normalize run ONCE per
+    chunk for every still-active (document, trial) pair across the whole
+    sub-batch, amortizing numpy dispatch that dominates per-document cost
+    on short texts.  Batch composition never changes a value: each
+    document draws from its OWN generator in the same order and shapes
+    (weights first, then full (T, g, 5) integer tensors per chunk
+    regardless of trial convergence), and every floating-point reduction
+    runs per (doc, trial) pair over the same operands in the same order
+    — batching only changes which python call issues them."""
     n_docs = len(keys_list)
     n_langs = model.probs.shape[1]
     out: list[np.ndarray | None] = [None] * n_docs
-    base = prior if prior is not None else np.full(n_langs, 1.0 / n_langs)
+    base = np.full(n_langs, 1.0 / n_langs)
     # batched prep: ONE searchsorted over the concatenated keys and ONE
     # unique over doc-offset row ids replace the per-doc lookup/unique loop
     # (which dominates prep cost on short documents).  Offsetting rows by
@@ -470,6 +390,36 @@ def doc_seed(doc_key: str, salt: int = 0) -> int:
     return (zlib.crc32(doc_key.encode("utf-8")) ^ salt) & 0xFFFFFFFF
 
 
+def _detect_keys(model: DetectorModel, keys_list, seeds, alpha: float,
+                 n_trial: int):
+    """The sampling detector over per-document gram keys: one Philox
+    stream per document seed, documents packed into sub-batches, then the
+    top-1 language if its posterior clears PROB_THRESHOLD.
+
+    Returns (posteriors, langs, confs, top): ``posteriors[i]`` is None
+    when document i has no known gram; ``top[i]`` is the model language
+    index, -1 with lang "unknown" and conf 0 when nothing clears."""
+    rngs = [np.random.Generator(np.random.Philox(key=int(s))) for s in seeds]
+    posteriors: list[np.ndarray | None] = []
+    for lo, hi in _pack_subbatches(keys_list):
+        posteriors.extend(
+            _detect_many_from_keys(
+                model, keys_list[lo:hi], rngs[lo:hi], alpha, n_trial
+            )
+        )
+    top = np.full(len(keys_list), -1)
+    confs = np.zeros(len(keys_list))
+    for i, p in enumerate(posteriors):
+        if p is None:
+            continue
+        j = int(np.argmax(p))
+        if p[j] > PROB_THRESHOLD:
+            top[i] = j
+            confs[i] = p[j]
+    langs = [model.langs[j] if j >= 0 else UNKNOWN_LANG for j in top.tolist()]
+    return posteriors, langs, confs, top
+
+
 def annotate_batch(
     model: DetectorModel,
     texts,
@@ -482,37 +432,14 @@ def annotate_batch(
     """Fused per-document annotate: langid + confidence + char-trigram
     perplexity from ONE gram extraction (the LM reuses the detector's
     post-purge gram keys; both stages share prepare_text).
-    Returns (langs, confs, ppl) with ppl = nan where undefined."""
+    Returns (langs, confs, ppl) with ppl = nan where undefined — the LM
+    scores only documents whose language cleared the threshold."""
     from .perplexity import perplexity_many_from_keys
 
-    lang_conf = np.zeros(len(texts))
-    out_langs: list[str] = []
     keys_list = _batch_keys(texts, max_text_length)
-    rngs = [np.random.Generator(np.random.Philox(key=int(s))) for s in seeds]
-    results: list[np.ndarray | None] = []
-    for lo, hi in _pack_subbatches(keys_list):
-        results.extend(
-            _detect_many_from_keys(
-                model, keys_list[lo:hi], rngs[lo:hi], alpha, n_trial, None
-            )
-        )
-    # LM scoring batched across the whole batch (one lookup pair instead
-    # of one per doc — bit-identical, see perplexity_many_from_keys);
-    # lang_idx = -1 marks docs the detector rejected (no ppl, as before)
-    lang_idx = np.full(len(texts), -1)
-    for i, p in enumerate(results):
-        if p is None:
-            out_langs.append(UNKNOWN_LANG)
-            continue
-        top = int(np.argmax(p))
-        if p[top] > PROB_THRESHOLD:
-            out_langs.append(model.langs[top])
-            lang_conf[i] = p[top]
-            lang_idx[i] = top
-        else:
-            out_langs.append(UNKNOWN_LANG)
-    ppl = perplexity_many_from_keys(model, keys_list, lang_idx, lm_alpha)
-    return out_langs, lang_conf, ppl
+    _, langs, confs, top = _detect_keys(model, keys_list, seeds, alpha, n_trial)
+    ppl = perplexity_many_from_keys(model, keys_list, top, lm_alpha)
+    return langs, confs, ppl
 
 
 def detect_batch(
@@ -522,7 +449,6 @@ def detect_batch(
     alpha: float = ALPHA_DEFAULT,
     n_trial: int = N_TRIAL_DEFAULT,
     max_text_length: int = MAX_TEXT_LENGTH,
-    prior: np.ndarray | None = None,
 ) -> tuple[list[str], np.ndarray, np.ndarray]:
     """Detect a batch of raw texts.
 
@@ -531,28 +457,12 @@ def detect_batch(
     ``confs[i]`` its posterior probability, and ``posteriors`` the full
     (n_docs, n_langs) averaged posterior matrix.
     """
-    n_langs = len(model.langs)
-    out_langs: list[str] = []
-    confs = np.zeros(len(texts))
-    post = np.zeros((len(texts), n_langs))
     keys_list = _batch_keys(texts, max_text_length)
-    rngs = [np.random.Generator(np.random.Philox(key=int(s))) for s in seeds]
-    results: list[np.ndarray | None] = []
-    for lo, hi in _pack_subbatches(keys_list):
-        results.extend(
-            _detect_many_from_keys(
-                model, keys_list[lo:hi], rngs[lo:hi], alpha, n_trial, prior
-            )
-        )
-    for i, p in enumerate(results):
-        if p is None:
-            out_langs.append(UNKNOWN_LANG)
-            continue
-        post[i] = p
-        top = int(np.argmax(p))
-        if p[top] > PROB_THRESHOLD:
-            out_langs.append(model.langs[top])
-            confs[i] = p[top]
-        else:
-            out_langs.append(UNKNOWN_LANG)
-    return out_langs, confs, post
+    posteriors, langs, confs, _ = _detect_keys(
+        model, keys_list, seeds, alpha, n_trial
+    )
+    post = np.zeros((len(texts), len(model.langs)))
+    for i, p in enumerate(posteriors):
+        if p is not None:
+            post[i] = p
+    return langs, confs, post

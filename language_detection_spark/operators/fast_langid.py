@@ -23,8 +23,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..config import ALPHA_DEFAULT, BASE_FREQ, PROB_THRESHOLD, UNKNOWN_LANG
-from ..functions.ngram import extract_gram_keys
+from ..config import ALPHA_DEFAULT, BASE_FREQ, UNKNOWN_LANG
+from ..functions.ngram import extract_gram_keys_batch
 from ..functions.normalize import prepare_text, purge_latin_if_minor
 from ..models.factory import DetectorModel
 
@@ -36,77 +36,59 @@ class FastLangID:
         with np.errstate(divide="ignore"):
             self.logw = np.log(alpha / BASE_FREQ + model.probs)  # (G, L)
 
-    def _score_one(self, text: str) -> np.ndarray | None:
-        t = purge_latin_if_minor(prepare_text(text))
-        keys = extract_gram_keys(t)
-        if keys.size == 0:
-            return None
-        rows = self.model.lookup_rows(keys)
-        rows = rows[rows >= 0]
-        if rows.size == 0:
-            return None
-        ur, counts = np.unique(rows, return_counts=True)
-        # normalized NB score: mean log-weight per feature instance keeps
-        # scores length-invariant (confidence comparable across docs)
-        return (counts @ self.logw[ur]) / counts.sum()
+    def scores_batch(self, texts) -> list[np.ndarray | None]:
+        """Per-document NB score vectors (None for a None text or one with
+        no known gram) from ONE vectorized gram extraction and ONE model
+        lookup (searchsorted) across the whole batch, then a small
+        per-doc gather+matmul.  The normalized score — mean log-weight
+        per feature instance — keeps scores length-invariant
+        (confidence comparable across docs)."""
+        prepared = [
+            "" if t is None else purge_latin_if_minor(prepare_text(t))
+            for t in texts
+        ]
+        keys_list = extract_gram_keys_batch(prepared)
+        sizes = [k.size for k in keys_list]
+        all_rows = self.model.lookup_rows(
+            np.concatenate(keys_list) if sum(sizes) else np.empty(0, np.int64)
+        )
+        offsets = np.cumsum([0] + sizes)
+        out: list[np.ndarray | None] = []
+        for i in range(len(prepared)):
+            rows = all_rows[offsets[i] : offsets[i + 1]]
+            rows = rows[rows >= 0]
+            if rows.size == 0:
+                out.append(None)
+                continue
+            ur, counts = np.unique(rows, return_counts=True)
+            out.append((counts @ self.logw[ur]) / counts.sum())
+        return out
 
-    @staticmethod
-    def _confidence(scores: np.ndarray, best: int, scale: float = 1.0) -> float:
-        # LangIdV3-style normalized confidence: 1 / Σ exp(p_i − p_best)
-        return float(1.0 / np.exp(scale * (scores - scores[best])).sum())
+    def classify_batch(self, texts) -> tuple[list[str], np.ndarray]:
+        """Top-1 language per text with the LangIdV3-style normalized
+        confidence 1 / Σ exp(s_i − s_best); "unknown"/0.0 without
+        features."""
+        langs: list[str] = []
+        confs = np.zeros(len(texts))
+        for i, s in enumerate(self.scores_batch(texts)):
+            if s is None:
+                langs.append(UNKNOWN_LANG)
+                continue
+            best = int(np.argmax(s))
+            langs.append(self.langs[best])
+            confs[i] = 1.0 / np.exp(s - s[best]).sum()
+        return langs, confs
 
     def classify(self, text: str) -> tuple[str, float]:
-        s = self._score_one(text)
-        if s is None:
-            return UNKNOWN_LANG, 0.0
-        best = int(np.argmax(s))
-        return self.langs[best], self._confidence(s, best)
+        langs, confs = self.classify_batch([text])
+        return langs[0], float(confs[0])
 
     def rank(self, text: str) -> list[tuple[str, float]]:
         """All languages with softmax confidences, descending."""
-        s = self._score_one(text)
+        s = self.scores_batch([text])[0]
         if s is None:
             return []
         e = np.exp(s - s.max())
         p = e / e.sum()
         order = np.argsort(-p, kind="stable")
         return [(self.langs[int(i)], float(p[i])) for i in order]
-
-    def classify_batch(self, texts) -> tuple[list[str], np.ndarray]:
-        """Batched classify: ONE vectorized gram extraction and ONE model
-        lookup (searchsorted) across the whole Arrow batch, then a small
-        per-doc gather+matmul.  Bit-identical to calling :meth:`classify`
-        per document (the batch extractor is per-doc bit-equal and the
-        per-doc unique/score math is unchanged) — locked by
-        test_classify_batch_equals_per_doc."""
-        from ..functions.ngram import extract_gram_keys_batch
-
-        prepared = [
-            None if t is None else purge_latin_if_minor(prepare_text(t))
-            for t in texts
-        ]
-        keys_list = extract_gram_keys_batch(
-            [p if p is not None else "" for p in prepared]
-        )
-        sizes = [k.size for k in keys_list]
-        all_rows = self.model.lookup_rows(
-            np.concatenate(keys_list) if sum(sizes) else np.empty(0, np.int64)
-        )
-        offsets = np.cumsum([0] + sizes)
-        langs: list[str] = []
-        confs = np.zeros(len(texts))
-        for i, t in enumerate(texts):
-            if t is None:
-                langs.append(UNKNOWN_LANG)
-                continue
-            rows = all_rows[offsets[i] : offsets[i + 1]]
-            rows = rows[rows >= 0]
-            if rows.size == 0:
-                langs.append(UNKNOWN_LANG)
-                continue
-            ur, counts = np.unique(rows, return_counts=True)
-            s = (counts @ self.logw[ur]) / counts.sum()
-            best = int(np.argmax(s))
-            langs.append(self.langs[best])
-            confs[i] = self._confidence(s, best)
-        return langs, confs

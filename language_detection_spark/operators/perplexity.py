@@ -3,38 +3,22 @@
 Reuses the *same trained profile counts* as a backoff char-trigram LM —
 the reference's profiles are char-trigram count tables (LangProfile.java:
 31-33), so  P(c3 | c1 c2) = (count3 + a) / (count2 + a·V)  with add-a
-smoothing over the model's gram vocabulary.  Vectorized with the packed
-gram keys: a 3-gram key's low 34 bits are exactly its 2-char prefix key.
+smoothing over the model's gram vocabulary; a document's perplexity is
+exp(-mean log P) over its 3-gram instances.  Vectorized with the packed
+gram keys: a 3-gram key's low 34 bits are exactly its 2-char prefix key,
+and one lookup pair serves every document of a batch.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from ..functions.ngram import extract_gram_keys
+from ..functions.ngram import extract_gram_keys_batch
 from ..functions.normalize import prepare_text
 from ..models.factory import DetectorModel
 
 _PREFIX_MASK = (1 << 34) - 1
 _THREE_GRAM_MIN = 1 << 34
-
-
-def perplexity_from_keys(
-    model: DetectorModel, keys: np.ndarray, lang_index: int, alpha: float = 0.1
-) -> float | None:
-    """LM over already-extracted packed gram keys (shared with detection)."""
-    if not model.has_counts:
-        raise ValueError("model has no raw counts (needed for the LM)")
-    k3 = keys[keys >= _THREE_GRAM_MIN]
-    if k3.size == 0:
-        return None
-    V = float(model.keys.size)
-    r3 = model.lookup_rows(k3)
-    r2 = model.lookup_rows(k3 & _PREFIX_MASK)
-    c3 = np.where(r3 >= 0, model.counts_at(np.maximum(r3, 0), lang_index), 0)
-    c2 = np.where(r2 >= 0, model.counts_at(np.maximum(r2, 0), lang_index), 0)
-    logp = np.log(c3 + alpha) - np.log(c2 + alpha * V)
-    return float(np.exp(-logp.mean()))
 
 
 def perplexity_many_from_keys(
@@ -43,16 +27,17 @@ def perplexity_many_from_keys(
     lang_indices,
     alpha: float = 0.1,
 ) -> np.ndarray:
-    """Batched twin of :func:`perplexity_from_keys` — ONE searchsorted pair
-    over the concatenated 3-gram keys of every scored document instead of
-    two per document (the per-doc lookups dominated annotate cost after
-    detection itself was batched).
+    """Perplexity of each document's packed gram keys under the LM of
+    ``lang_indices[i]`` (None or < 0: not scored).  ONE searchsorted
+    pair over the concatenated 3-gram keys of every scored document
+    instead of two per document (the per-doc lookups dominated annotate
+    cost after detection itself was batched).
 
-    Bit-identical: every element of c3/c2/logp is computed by the same
-    IEEE ops on the same values; the per-document mean runs on a
-    contiguous slice of the same length and contents as the scalar path's
-    array, so numpy's pairwise summation blocks identically.  Returns
-    nan where undefined (no counts row is an error, as before)."""
+    Batch composition never changes a value: every element of c3/c2/logp
+    is computed per element, and each document's mean runs on its own
+    contiguous slice, so numpy's pairwise summation blocks as it would
+    on that document alone.  Returns nan where undefined (no 3-gram);
+    a model without counts is an error."""
     if not model.has_counts:
         raise ValueError("model has no raw counts (needed for the LM)")
     out = np.full(len(keys_list), np.nan)
@@ -88,22 +73,12 @@ def perplexity_many_from_keys(
     return out
 
 
-def perplexity_one(
-    model: DetectorModel, text: str, lang_index: int, alpha: float = 0.1
-) -> float | None:
-    return perplexity_from_keys(
-        model, extract_gram_keys(prepare_text(text)), lang_index, alpha
-    )
-
-
 def perplexity_batch(
     model: DetectorModel,
     texts,
     lang_indices,
     alpha: float = 0.1,
 ) -> np.ndarray:
-    from ..functions.ngram import extract_gram_keys_batch
-
     # None texts get no keys (and a None text was never scored before);
     # docs with li < 0 are skipped inside the batched scorer anyway
     prepared = [prepare_text(t) if t is not None else "" for t in texts]

@@ -623,12 +623,14 @@ def language_rebalance(
     """
     if not target_permille or min(target_permille.values()) < 1:
         raise ValueError("target_permille must map langs to positive permille")
-    spark = df.sparkSession
-    tgt = spark.createDataFrame(
+    from ..plans.caching import persist_tracked
+    from ..plans.repartition import literal_frame
+
+    tgt = literal_frame(
+        df.sparkSession,
         [(k, int(v)) for k, v in sorted(target_permille.items())],
         f"{lang_col}: string, share_pm: int",
     )
-    from ..plans.caching import persist_tracked
 
     # persist the ≤|langs|-row count table: the n_star broadcast and the
     # rates broadcast each re-ran the corpus aggregation otherwise

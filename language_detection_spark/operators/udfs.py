@@ -6,6 +6,7 @@ UDFs anywhere, per the engine contract):
 2. ``make_annotate_udf(model)``  (url, text) → struct(lang, lang_conf, ppl)
                                  wrapping P1-P6 + F1-F2 + I1-I4 + Q2
 3. ``make_detect_udf(model)``    (url, text) → struct(lang, lang_conf)
+4. ``make_fast_langid_udf(model, spark)`` text → FastLangID top-1 label
 
 How the detector model travels: with a session, the UDF closure holds
 only the Spark broadcast handle (:func:`_model_ref`), never the model
@@ -19,6 +20,7 @@ closure keeps the model for local, in-process use.
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 import numpy as np
@@ -33,6 +35,7 @@ from pyspark.sql.types import (
 
 from ..models.factory import DetectorModel
 from .detector import annotate_batch, detect_batch, doc_seed
+from .fast_langid import FastLangID
 
 DETECT_SCHEMA = StructType(
     [
@@ -100,6 +103,26 @@ def make_detect_udf(model: DetectorModel, spark=None, seed_salt: int = 0):
         return f(F.struct(F.col(url_col).alias("url"), F.col(text_col).alias("text")))
 
     return apply
+
+
+@functools.lru_cache(maxsize=1)
+def _fast_langid_for(model: DetectorModel) -> FastLangID:
+    # keyed by model identity: FastLangID's float64 log-weight table is as
+    # large as the model itself, so a Python worker builds it once per
+    # model copy (the broadcast's) instead of once per task; taking the
+    # logs on each batch's gathered rows instead costs 20-36% more
+    # scoring CPU
+    return FastLangID(model)
+
+
+def make_fast_langid_udf(model: DetectorModel, spark):
+    get_model = _model_ref(model, spark)
+
+    def _cls(texts: pd.Series) -> pd.Series:
+        langs, _ = _fast_langid_for(get_model()).classify_batch(list(texts))
+        return pd.Series(langs)
+
+    return F.pandas_udf(_cls, StringType())
 
 
 def make_annotate_udf(model: DetectorModel, spark=None, seed_salt: int = 0,

@@ -763,21 +763,24 @@ def _train_gram_oracle_sql(sf_dir: str | None = None) -> str | None:
     import duckdb
     import numpy as np
 
-    from .functions.ngram import extract_gram_keys
+    from .functions.ngram import extract_gram_keys_batch
     from .functions.normalize import normalize_vi
 
     docs = duckdb.sql(
-        f"SELECT lang, text FROM '{sf_dir}/documents.parquet' ORDER BY doc_id"
+        f"SELECT lang, text FROM '{sf_dir}/documents.parquet' "
+        "WHERE text IS NOT NULL ORDER BY doc_id"
     ).fetchall()
     rows = []
-    for lang, text in docs:
-        if text is None:
-            continue
-        uk, n = np.unique(extract_gram_keys(normalize_vi(text)),
-                          return_counts=True)
-        rows.extend(
-            f"('{lang}',{int(k)},{int(c)})" for k, c in zip(uk, n)
-        )
+    # fixed-size slices (about one Arrow batch) keep the key arrays held
+    # at once bounded whatever the corpus size
+    for lo in range(0, len(docs), 10_000):
+        part = docs[lo : lo + 10_000]
+        keys = extract_gram_keys_batch([normalize_vi(t) for _, t in part])
+        for (lang, _), doc_keys in zip(part, keys):
+            uk, n = np.unique(doc_keys, return_counts=True)
+            rows.extend(
+                f"('{lang}',{int(k)},{int(c)})" for k, c in zip(uk, n)
+            )
     if not rows:
         return None
     return f"""
@@ -803,23 +806,13 @@ def q_train_gram_counts(spark, sf_dir):
 def q_fast_langid(spark, sf_dir):
     """I5-I8: single-pass NB classifier label distribution."""
     from .models.factory import load_default_model
-    from .operators.fast_langid import FastLangID
-
+    from .operators.udfs import make_fast_langid_udf
     from .plans.repartition import parallelize_scan
 
-    model = load_default_model()
+    cls = make_fast_langid_udf(load_default_model(), spark)
     docs = parallelize_scan(_docs(spark, sf_dir))
-    from pyspark.sql.types import StringType
-
-    fast = FastLangID(model)
-
-    @F.pandas_udf(StringType())
-    def _cls(texts: pd.Series) -> pd.Series:
-        langs, _ = fast.classify_batch(list(texts))
-        return pd.Series(langs)
-
     return (
-        docs.withColumn("pred", _cls(F.col("text")))
+        docs.withColumn("pred", cls(F.col("text")))
         .groupBy("pred")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("pred")

@@ -221,12 +221,13 @@ def test_vectorized_matches_scanner_random():
 
 
 def test_batched_extractor_matches_per_doc_random():
-    """extract_gram_keys_batch must be BIT-identical per document to
-    extract_gram_keys — same keys, same order — because detector draw
-    indices map positionally into the per-doc key array (bitwise
+    """extract_gram_keys_batch must be BIT-identical per document to the
+    one-document closed form — same keys, same order — because detector
+    draw indices map positionally into the per-doc key array (bitwise
     reproducibility depends on it).  Random unicode incl. spaces, caps
     runs, empties, and docs adjacent to each other in the batch."""
     from language_detection_spark.functions.ngram import extract_gram_keys_batch
+    from tests.kernel_arbiters import gram_keys_closed_form
 
     rng = np.random.default_rng(7)
     pools = [
@@ -244,5 +245,7 @@ def test_batched_extractor_matches_per_doc_random():
     batch = extract_gram_keys_batch(docs)
     assert len(batch) == len(docs)
     for t, got in zip(docs, batch):
-        want = extract_gram_keys(t)
+        want = gram_keys_closed_form(t)
+        assert want.dtype == got.dtype == np.int64
         assert np.array_equal(want, got), t.encode("unicode_escape")
+        assert np.array_equal(extract_gram_keys(t), got)

@@ -236,10 +236,12 @@ def test_minhash_engines_agree(spark):
 
 def test_classify_batch_equals_per_doc():
     """FastLangID.classify_batch (one batched extraction + one model
-    lookup) must be BIT-identical to per-doc classify — labels and
-    confidences — including None/empty/featureless/unicode edge docs."""
+    lookup) must be BIT-identical to the per-doc score's arbiter —
+    labels and confidences — including None/empty/featureless/unicode
+    edge docs; classify is the one-document form of the batch."""
     from language_detection_spark.models.factory import load_default_model
     from language_detection_spark.operators.fast_langid import FastLangID
+    from tests.kernel_arbiters import fast_langid_classify
 
     fast = FastLangID(load_default_model())
     texts = [
@@ -259,9 +261,12 @@ def test_classify_batch_equals_per_doc():
         if t is None:
             assert langs_b[i] == "unknown" and confs_b[i] == 0.0
             continue
-        lang_1, conf_1 = fast.classify(t)
+        lang_1, conf_1 = fast_langid_classify(fast, t)
         assert langs_b[i] == lang_1, (i, t)
         assert confs_b[i] == conf_1, (i, t)  # bitwise, not approx
+        assert fast.classify(t) == (lang_1, conf_1), (i, t)
+        top = [lang for lang, _ in fast.rank(t)[:1]]
+        assert top == ([] if lang_1 == "unknown" else [lang_1]), (i, t)
 
 
 def test_release_tracked_caches_actually_releases(spark, dup_docs):

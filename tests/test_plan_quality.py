@@ -48,7 +48,9 @@ def test_annotate_udf_evaluates_once(spark, tiny_model):
     assert plan.count("ArrowEvalPython") == 1
 
 
-@pytest.mark.parametrize("factory", ["make_annotate_udf", "make_detect_udf"])
+@pytest.mark.parametrize(
+    "factory", ["make_annotate_udf", "make_detect_udf", "make_fast_langid_udf"]
+)
 def test_udf_command_does_not_carry_the_model(spark, monkeypatch, factory):
     """With a session, the function handed to pandas_udf references only
     the model broadcast: pickled it is KBs, not the ~35 MB model (which
@@ -71,6 +73,28 @@ def test_udf_command_does_not_carry_the_model(spark, monkeypatch, factory):
     getattr(udfs, factory)(model, spark)
     assert len(handed) == 1
     assert len(cloudpickle.dumps(handed[0])) < 1e6
+
+
+def test_fast_langid_udf_builds_its_scorer_once_per_model(spark, monkeypatch,
+                                                          tiny_model):
+    """The FastLangID log-weight table is as large as the model: a Python
+    worker builds it once per model copy (the broadcast's), not once per
+    Arrow batch."""
+    import pandas as pd
+
+    from language_detection_spark.operators import udfs
+
+    built = []
+    real = udfs.FastLangID
+    monkeypatch.setattr(
+        udfs, "FastLangID", lambda m: built.append(m) or real(m))
+    udfs._fast_langid_for.cache_clear()
+    cls = udfs.make_fast_langid_udf(tiny_model, spark).func
+    texts = pd.Series(["the cat sat on the mat", None, "le chien et le chat"])
+    first, second = list(cls(texts)), list(cls(texts))
+    udfs._fast_langid_for.cache_clear()
+    assert len(built) == 1
+    assert first == second == real(tiny_model).classify_batch(list(texts))[0]
 
 
 def test_html_projected_away_before_shuffle(spark, tiny_model, sf_dir):

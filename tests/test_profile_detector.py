@@ -310,7 +310,8 @@ def _perplexity_full_matrix(model, keys_list, lang_indices, alpha=0.1):
 def test_perplexity_gather_bitwise_equals_full_matrix():
     """perplexity through DetectorModel.counts_at is bitwise equal to the
     old full-matrix formula on the bundled model, and neither the batched
-    nor the scalar LM (nor annotate_batch) builds the counts matrix."""
+    LM nor its per-document arbiter (nor annotate_batch) builds the
+    counts matrix."""
     import pickle
 
     import numpy as np
@@ -322,9 +323,9 @@ def test_perplexity_gather_bitwise_equals_full_matrix():
         annotate_batch,
     )
     from language_detection_spark.operators.perplexity import (
-        perplexity_from_keys,
         perplexity_many_from_keys,
     )
+    from tests.kernel_arbiters import perplexity_from_keys
 
     texts = [
         "the quick brown fox jumps over the lazy dog near the river bank",
@@ -397,7 +398,7 @@ def test_draw_prefetch_bitwise_invariant(tiny_model):
 
 def test_groupwise_early_exit_bitwise_matches_scalar(tiny_model):
     """The batched detector's per-group convergence early-exit must be
-    bitwise-identical to the unchanged scalar path (_detect_from_keys):
+    bitwise-identical to the per-document arbiter (_detect_from_keys):
     same draws, same float32 group products, same float64 running
     product in np.cumprod order, same per-group normalize.  Mix of
     fast-converging, slow (repetitive), multi-chunk and featureless
@@ -407,6 +408,7 @@ def test_groupwise_early_exit_bitwise_matches_scalar(tiny_model):
 
     from language_detection_spark.config import ALPHA_DEFAULT, N_TRIAL_DEFAULT
     from language_detection_spark.operators import detector as det
+    from tests.kernel_arbiters import _detect_from_keys
 
     texts = [
         "the quick brown fox jumps over the lazy dog " * 8,
@@ -420,11 +422,11 @@ def test_groupwise_early_exit_bitwise_matches_scalar(tiny_model):
     keys_list = det._batch_keys(texts, 10000)
     rngs = [np.random.Generator(np.random.Philox(key=s)) for s in seeds]
     batched = det._detect_many_from_keys(
-        tiny_model, keys_list, rngs, ALPHA_DEFAULT, N_TRIAL_DEFAULT, None
+        tiny_model, keys_list, rngs, ALPHA_DEFAULT, N_TRIAL_DEFAULT
     )
     for i, (keys, s) in enumerate(zip(keys_list, seeds)):
         rng = np.random.Generator(np.random.Philox(key=s))
-        ref = det._detect_from_keys(
+        ref = _detect_from_keys(
             tiny_model, keys, rng, ALPHA_DEFAULT, N_TRIAL_DEFAULT, None
         )
         if ref is None:

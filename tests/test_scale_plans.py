@@ -26,7 +26,8 @@ def _analyzed(df) -> str:
 
 def test_small_driver_frames_plan_no_python_rdd(spark, tmp_path, monkeypatch):
     """The library's small driver-side frames (BPE merge table, fixture
-    blocklist, the dedup stage's audit row) are literal arrays: a
+    blocklist, language_rebalance's target shares, the dedup stage's
+    audit row) are literal arrays: a
     ``createDataFrame(<python list>)`` frame plans a LogicalRDD, whose
     scan starts Python workers of its own."""
     import sys
@@ -34,6 +35,9 @@ def test_small_driver_frames_plan_no_python_rdd(spark, tmp_path, monkeypatch):
 
     from pyspark.sql import DataFrameWriter
 
+    from language_detection_spark.operators.text_analysis import (
+        language_rebalance,
+    )
     from language_detection_spark.operators.tokenizer import bpe_merges_df
     from language_detection_spark.operators.url_filter import synth_blocklist
 
@@ -45,6 +49,11 @@ def test_small_driver_frames_plan_no_python_rdd(spark, tmp_path, monkeypatch):
     assert [tuple(r) for r in bpe_merges_df(spark, merges).collect()] == merges
     assert bpe_merges_df(spark, []).count() == 0
     assert synth_blocklist(spark).count() == 6
+    docs = spark.range(200).selectExpr(
+        "id AS doc_id", "IF(id % 4 = 0, 'en', 'de') AS lang")
+    rebalanced = language_rebalance(docs, {"de": 500, "en": 500})
+    assert "LogicalRDD" not in _analyzed(rebalanced)
+    assert 0 < rebalanced.count() <= 100
 
     sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
     import run_pipeline
