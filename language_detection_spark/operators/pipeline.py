@@ -65,8 +65,8 @@ class QualityFilterPipeline:
         keep_cols = [c for c in df.columns if c != "html"]
         df = df.select(*keep_cols)
         # a caller (run_checkpointed) may have bucketed already — recomputing
-        # with a different modulus would route rows outside the committed
-        # chunk and let dynamic overwrite clobber committed partitions
+        # with a different modulus would put rows of buckets outside the
+        # chunk into its directory, where its audit rows do not count them
         if "bucket" not in df.columns:
             df = df.withColumn("bucket", bucket_col("url", self.opts.n_buckets))
         if self.opts.repartition:

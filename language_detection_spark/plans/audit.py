@@ -5,7 +5,8 @@ kept rows, per-rule drop counts, run id.  Metrics are aggregated from the
 *written annotated output* (narrow boolean/stat columns only — parquet
 column pruning makes this re-scan cheap even at 100 TB), so audit numbers
 always describe data that actually committed, never a speculative pass.
-Global counters additionally ride the main action via ``df.observe``.
+Job-level totals are sums over these rows; no counter rides the write
+action itself.
 """
 
 from __future__ import annotations
@@ -31,17 +32,3 @@ def audit_aggregation(annotated: DataFrame, run_id: str) -> DataFrame:
         .withColumn("committed_at", F.current_timestamp())
     )
 
-
-def attach_observers(df: DataFrame, name: str = "pipeline_metrics"):
-    """Global metric counters evaluated inside the main action (no extra
-    pass).  Returns (df, observation)."""
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    df = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.col("keep").cast("long")).alias("rows_kept"),
-        F.avg(F.col("lang_conf")).alias("avg_lang_conf"),
-    )
-    return df, obs

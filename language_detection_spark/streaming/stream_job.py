@@ -72,7 +72,8 @@ def run_stream_with_audit(
     max_files_per_trigger: int | None = None,
 ) -> dict:
     """FULL pipeline (annotate + rules + scrub) inside ``foreachBatch``,
-    with the same data/audit commit protocol as plans/checkpoint.py:
+    with a data/audit commit protocol like plans/checkpoint.py's, still in
+    per-bucket directories rather than its flat per-chunk ones:
 
     * data → ``<out>/data/batch_id=<b>/bucket=<k>/`` (dynamic partition
       overwrite: a REPLAYED micro-batch — foreachBatch offers at-least-once

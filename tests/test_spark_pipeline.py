@@ -210,11 +210,14 @@ def test_checkpoint_annotate_per_chunk(spark, tiny_model, multilingual_pages,
                                  PipelineOptions(n_buckets=8))
     seen_counts: list[int] = []
     seen_urls: list[set] = []
+    write_tasks: list[int] = []
 
     def counting_annotate(df):
         seen_counts.append(df.count())
         seen_urls.append({r.url for r in df.select("url").collect()})
-        return pipe.annotate(df)
+        out = pipe.annotate(df)
+        write_tasks.append(out.rdd.getNumPartitions())
+        return out
 
     out = str(tmp_path / "out")
     summary = run_checkpointed(
@@ -230,18 +233,126 @@ def test_checkpoint_annotate_per_chunk(spark, tiny_model, multilingual_pages,
     data = spark.read.parquet(f"{out}/data")
     assert data.count() == n_total
     assert summary["buckets_committed_now"] == 8
-    # each chunk's write leaves exactly one file per bucket directory
-    # (hash-partitioning on bucket sends a bucket to one reducer, whatever
-    # AQE coalesces), and the audit reconciles with the data
-    dirs = sorted((tmp_path / "out" / "data").glob("bucket=*"))
-    assert len(dirs) == 8
-    for d in dirs:
-        assert len(list(d.glob("part-*.parquet"))) == 1, d.name
+    # each chunk is written flat into one directory of its own, by its
+    # annotate tasks (no file per bucket): a bucket's rows lie in exactly
+    # one chunk directory, a chunk has at most one file per write task,
+    # and the audit names the chunk and reconciles with the data
+    dirs = sorted((tmp_path / "out" / "data").glob("chunk=*"))
+    assert len(dirs) == 4
     audit = spark.read.parquet(f"{out}/audit")
-    assert {r.bucket for r in audit.collect()} == set(range(8))
+    chunk_of = {r.bucket: r.chunk for r in audit.collect()}
+    assert set(chunk_of) == set(range(8))
+    assert {f"chunk={c}" for c in chunk_of.values()} == {d.name for d in dirs}
+    placed = data.groupBy("bucket").agg(
+        F.collect_set("chunk").alias("chunks")).collect()
+    for r in placed:
+        assert r.chunks == [chunk_of[r.bucket]], r.bucket
+    for i, tasks in enumerate(write_tasks):           # chunk i = [2i, 2i+1]
+        d = tmp_path / "out" / "data" / f"chunk={chunk_of[2 * i]}"
+        assert 1 <= len(list(d.glob("part-*.parquet"))) <= tasks, d.name
+    # a chunk's audit rows land as one file: its append is all or nothing
+    assert len(list((tmp_path / "out" / "audit").glob("part-*.parquet"))) == 4
     tot = audit.agg(F.sum("rows_in"), F.sum("rows_kept")).first()
     assert tot[0] == n_total
     assert tot[1] == data.filter(F.col("keep")).count()
+
+
+def test_checkpoint_crash_before_audit_commit(spark, tiny_model,
+                                              multilingual_pages, tmp_path,
+                                              monkeypatch):
+    """A crash between a chunk's data write and its audit append leaves an
+    uncommitted chunk directory; resume deletes it and writes the chunk
+    again, so every url lands once and the audit equals the data."""
+    from language_detection_spark.plans import checkpoint
+
+    pipe = QualityFilterPipeline(spark, tiny_model, _CKPT_CFG,
+                                 PipelineOptions(n_buckets=8))
+    out = str(tmp_path / "out")
+    real_audit = checkpoint._chunk_audit
+    calls = []
+
+    def audit_lost_once(*args):
+        calls.append(args)
+        if len(calls) == 2:
+            raise RuntimeError("audit append lost")
+        return real_audit(*args)
+
+    monkeypatch.setattr(checkpoint, "_chunk_audit", audit_lost_once)
+    with pytest.raises(RuntimeError, match="audit append lost"):
+        run_checkpointed(multilingual_pages, out, n_buckets=8, chunk_size=4,
+                         annotate=pipe.annotate)
+    orphan = tmp_path / "out" / "data" / f"chunk={calls[1][3]}"
+    assert orphan.is_dir()
+    assert committed_buckets(spark, out) == {0, 1, 2, 3}
+
+    summary = run_checkpointed(multilingual_pages, out, n_buckets=8,
+                               chunk_size=4, annotate=pipe.annotate)
+    assert summary["buckets_previously_committed"] == 4
+    assert summary["buckets_committed_now"] == 4
+    assert not orphan.exists()
+    assert len(list((tmp_path / "out" / "data").glob("chunk=*"))) == 2
+    data = spark.read.parquet(f"{out}/data")
+    n_total = multilingual_pages.count()
+    assert data.count() == data.select("url").distinct().count() == n_total
+    per_bucket = {
+        r.bucket: (r.n, r.kept) for r in data.groupBy("bucket").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("keep").cast("long")).alias("kept")).collect()
+    }
+    audit = {r.bucket: (r.rows_in, r.rows_kept)
+             for r in spark.read.parquet(f"{out}/audit").collect()}
+    assert set(audit) == set(range(8))
+    for b in range(8):
+        assert audit[b] == per_bucket.get(b, (0, 0)), b
+
+
+def test_checkpoint_rejects_older_layout(spark, tmp_path):
+    """An output directory of the older per-bucket layout fails loudly,
+    before anything is written or deleted."""
+    def never(df):
+        raise AssertionError("annotate ran on a mismatched layout")
+
+    pages = spark.range(4).select(
+        F.concat(F.lit("https://x.example/"), F.col("id").cast("string"))
+        .alias("url"))
+    old_data = str(tmp_path / "a")
+    spark.range(4).withColumn("bucket", (F.col("id") % 2).cast("int")) \
+        .write.partitionBy("bucket").parquet(f"{old_data}/data")
+    with pytest.raises(ValueError, match="bucket=.*layout"):
+        run_checkpointed(pages, old_data, n_buckets=2, annotate=never)
+    assert sorted(p.name for p in (tmp_path / "a" / "data").iterdir()
+                  if not p.name.startswith(("_", "."))) == [
+        "bucket=0", "bucket=1"]
+
+    old_audit = str(tmp_path / "b")
+    spark.range(2).select(F.col("id").cast("int").alias("bucket")) \
+        .write.parquet(f"{old_audit}/audit")
+    with pytest.raises(ValueError, match="no chunk column.*layout"):
+        run_checkpointed(pages, old_audit, n_buckets=2, annotate=never)
+    assert not (tmp_path / "b" / "data").exists()
+
+
+def test_checkpoint_leaves_session_conf_and_reads_typed(spark, tiny_model,
+                                                        multilingual_pages,
+                                                        tmp_path):
+    """run_checkpointed sets nothing on the caller's session, and the data
+    directory reads back with ``bucket`` an int and ``chunk`` a string,
+    also for a run id that would make a chunk id look like a date."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    pipe = QualityFilterPipeline(spark, tiny_model, _CKPT_CFG,
+                                 PipelineOptions(n_buckets=32))
+    out = str(tmp_path / "out")
+    spark.conf.set(key, "STATIC")
+    try:
+        run_checkpointed(multilingual_pages, out, n_buckets=32,
+                         chunk_size=16, run_id="2024-01",
+                         annotate=pipe.annotate)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.unset(key)
+    types = dict(spark.read.parquet(f"{out}/data").dtypes)
+    assert types["bucket"] == "int"
+    assert types["chunk"] == "string"
 
 
 def test_trainer_matches_local_update(spark):
